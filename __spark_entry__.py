@@ -53,16 +53,17 @@ _FRONT = [
     # changed code (the r10/r11 precedent). Changes behind each:
     #   curation_funnel — stage-3 count folded into the first LSH job
     #     as an Observation (no dedicated fill wave); CC threshold
-    #     probe reuses minhash_dedup's eager pair count;
+    #     probe reuses minhash_dedup's eager pair count (n_edges);
     #   sim_pair_pack — lsh_topk pins the banded + normed frames that
     #     feed both sides of its self-joins (each executed twice
-    #     before); the mhlsh member carries the pair-count stash;
+    #     before);
     #   text_doc_pack — the row-local member trio (repetition line
     #     signal, PII scrub, BPE token counts) fused into ONE
     #     projection via repetition_stats extra_cols;
     #   dedup_cluster_pack — dedup_components persists+counts its
-    #     (provably distinct) blocked-GEMM pair list and runs CC with
-    #     edges_ready=True (edge-dedup shuffle + checkpoint copy gone).
+    #     (provably distinct) blocked-GEMM pair list and hands that
+    #     count to CC as n_edges (edge-dedup shuffle, checkpoint copy
+    #     and probe count gone).
     # All hold local foreign-session DuckDB greens (102/102 sweep run
     # before the round-12 commit).
     "curation_funnel", "sim_pair_pack", "text_doc_pack",

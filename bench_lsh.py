@@ -57,8 +57,8 @@ def main() -> None:
     n_total = corpus.count()
 
     t0 = time.perf_counter()
-    pairs = DD.minhash_dedup(corpus, num_perm=16, bands=8, threshold=0.9)
-    n_pairs = pairs.count()
+    pairs, n_pairs = DD.minhash_dedup(corpus, num_perm=16, bands=8,
+                                      threshold=0.9)
     dt = round(time.perf_counter() - t0, 1)
 
     planted = (pairs.where((F.col("id_b") - F.col("id_a") == 10_000_000)

@@ -122,22 +122,26 @@ def curate_documents(docs: DataFrame, cfg: CurationConfig | None = None,
     # Round 12 (VERDICT r11 #1): the dedicated `s3.count()` fill wave is
     # gone — n3 rides the FIRST LSH pass as a third Observation. The
     # first action over s3 is minhash_dedup's verified-pair count (its
-    # banded and token-array subtrees both read s3); the cache fills
-    # once under that job (block-level locking computes each partition
-    # exactly once, so CollectMetrics cannot double-count) and all
-    # three observations collect there. minhash_dedup's eager count —
-    # the pinned-input release barrier of rounds 8-10 — is untouched;
-    # only the funnel's own counting wave is removed.
-    pairs = DD.minhash_dedup(s3, text_col, id_col, cfg.num_perm,
-                             cfg.bands, cfg.near_dup_threshold)
+    # banded and token-array subtrees both read s3); all three
+    # observations collect there. n3 is exact only if s3's cache fills
+    # each partition once under that job: in single-JVM local mode the
+    # block manager's per-block lock guarantees it, but with several
+    # executors the two subtrees can each compute (and count) the same
+    # partition before either caches it. That race is unverified; the
+    # multi-executor fault-injection tier (ROADMAP item 3) is where it
+    # gets tested and fixed. minhash_dedup's eager count — the
+    # pinned-input release barrier of rounds 8-10 — is untouched; only
+    # the funnel's own counting wave is removed.
+    pairs, n_pairs = DD.minhash_dedup(s3, text_col, id_col, cfg.num_perm,
+                                      cfg.bands, cfg.near_dup_threshold)
     n0, n1 = (obs12.get["n0"], obs12.get["n1"])  # the observed counts
     n2 = obs2.get["n2"]
     n3 = obs3.get["n3"]
     vertices = s3.select(F.col(id_col).alias("id"))
-    # edges_ready: minhash_dedup's pair list is distinct by
-    # construction (candidates are distinct, verify joins are 1:1) and
-    # persisted+counted — CC skips its dedup shuffle + checkpoint copy
-    comp = DD.connected_components(pairs, vertices, edges_ready=True)
+    # minhash_dedup's pair list is distinct by construction and
+    # persisted+counted — CC skips its dedup shuffle, checkpoint copy
+    # and size-probe count
+    comp = DD.connected_components(pairs, vertices, n_edges=n_pairs)
     # connected_components checkpoints its labels eagerly, so the
     # (possibly corpus-scale) verified pair cache releases here
     pairs.unpersist()

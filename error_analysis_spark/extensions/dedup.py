@@ -357,8 +357,8 @@ def banded_signatures(df: DataFrame, text_col: str = "text",
                       bands: int = 8, seed: int = 42,
                       with_set_size: bool = False) -> DataFrame:
     """Row-local LSH banding over `minhash_wide`: band sig = md5 of the
-    band's sorted "perm:minhash" strings (byte-identical to the format
-    `lsh_candidate_pairs` aggregates from the long form). Output:
+    band's sorted "perm:minhash" strings (byte-identical to grouping the
+    long `minhash_signatures` form by (id, perm // rows_per_band)). Output:
     (id, band, sig) with bands exploded — still no shuffle before the
     candidate self-join. With `with_set_size`, `sz` (distinct raw-token
     count, see minhash_wide) rides along for candidate-time length
@@ -385,38 +385,14 @@ def banded_signatures(df: DataFrame, text_col: str = "text",
                     F.col("bs.sig").alias("sig")))
 
 
-def lsh_candidate_pairs(signatures: DataFrame, num_perm: int = 32,
-                        bands: int = 8) -> DataFrame:
-    """LSH banding: group the k minhashes into `bands` rows-per-band blocks,
-    hash each block, self-join on (band, block hash). Output unique
-    (id_a < id_b) candidate pairs."""
-    if num_perm % bands:
-        raise ValueError(
-            f"num_perm={num_perm} must divide evenly into bands={bands}")
-    rows_per_band = num_perm // bands
-    banded = (
-        signatures
-        .withColumn("band", (F.col("perm") / rows_per_band).cast("int"))
-        .groupBy("id", "band")
-        .agg(F.md5(F.concat_ws(",", F.array_sort(
-            F.collect_list(F.concat_ws(":", "perm", "minhash"))))).alias("sig"))
-    )
-    a = banded.select(F.col("id").alias("id_a"), "band", "sig")
-    b = banded.select(F.col("id").alias("id_b"), "band", "sig")
-    return (
-        a.join(b, ["band", "sig"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b").distinct()
-    )
-
-
 def minhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                   num_perm: int = 32, bands: int = 8,
-                  threshold: float = 0.5) -> DataFrame:
+                  threshold: float = 0.5) -> tuple[DataFrame, int]:
     """Full MinHash-LSH near-dup: signatures → banded candidates → exact
-    Jaccard verification of candidates only. Uses the row-local banded
-    form, so the first exchange in the whole pipeline is the candidate
-    self-join on (band, sig).
+    Jaccard verification of candidates only. Returns (pairs, n_pairs):
+    the persisted (id_a, id_b, jaccard) list and its row count. Uses the
+    row-local banded form, so the first exchange in the whole pipeline
+    is the candidate self-join on (band, sig).
 
     Cache discipline (same contract as `jaccard_pairs`): the banded
     table and the token-set arrays each feed BOTH sides of a self-join
@@ -427,7 +403,10 @@ def minhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     sf0.1 on the funnel's dense synthetic graph). So both inputs are
     pinned, the verified pair list materializes eagerly into its own
     persisted DataFrame, the inputs release HERE, and the caller owns
-    the result's release via the standard `result.unpersist()`."""
+    the result's release via the standard `result.unpersist()`. The
+    list is distinct (candidates are distinct, the verify joins are
+    1:1), so `connected_components(pairs, ..., n_edges=n_pairs)` can
+    use it as-is."""
     # with_set_size (round 11): the banded frame carries each doc's
     # distinct-token count so the provable length guard prunes
     # candidates AT THE BAND JOIN, before the candidate-dedup exchange
@@ -462,11 +441,7 @@ def minhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     n_pairs = result.count()  # last consumer of the pins → release them
     banded.unpersist()
     tok_arr.unpersist()
-    # round 12: the eager count above already materialized the pair
-    # list; stash it so connected_components(edges_ready=True) callers
-    # skip their own edge-count job over the cache (one fewer wave).
-    result._graft_materialized_count = n_pairs
-    return _track(result)
+    return _track(result), n_pairs
 
 
 def _verify_jaccard(cands: DataFrame, tok_arr: DataFrame,
@@ -509,7 +484,7 @@ def _verify_jaccard(cands: DataFrame, tok_arr: DataFrame,
 def connected_components(pairs: DataFrame, vertices: DataFrame,
                          max_iter: int = 25,
                          local_threshold: int = 4_000_000,
-                         edges_ready: bool = False) -> DataFrame:
+                         n_edges: int | None = None) -> DataFrame:
     """Near-dup clusters via hash-min label propagation: every vertex
     starts labeled with its own id; each iteration pushes the min label
     across edges until fixpoint. Output: (id, component) with component
@@ -536,6 +511,15 @@ def connected_components(pairs: DataFrame, vertices: DataFrame,
     compression. Each iteration is one neighbor join + one groupBy +
     one relabel join (all shuffles on `id`); the loop checks
     convergence with a cheap count instead of checkpointing every pass.
+
+    `n_edges`: the caller states that `pairs` is a DISTINCT (id_a, id_b)
+    edge list backed by a materialized store (persisted AND computed,
+    or checkpointed) holding exactly `n_edges` rows — as returned by
+    `minhash_dedup`. The edge-dedup shuffle, the checkpoint copy and
+    the size-probe count are then skipped. Do NOT pass it for lazy
+    pipelines: the probe + collect would re-execute them per consumer.
+    The local path raises ValueError if the collected edge count
+    differs from `n_edges`.
     """
     # materialize the deduped edge list ONCE, then probe from the
     # checkpointed table. `pairs` is typically an expensive lazy
@@ -544,22 +528,10 @@ def connected_components(pairs: DataFrame, vertices: DataFrame,
     # that pipeline TWICE on every above-threshold graph — measured at
     # sf0.1 this halved the funnel's near-dup stage. Below threshold
     # the extra cost is one bounded write of ≤ local_threshold rows.
-    # `edges_ready` (round 11): the caller asserts `pairs` is ALREADY a
-    # distinct (id_a, id_b) edge list backed by a materialized store
-    # (persisted AND computed, or checkpointed — minhash_dedup's
-    # verified pair list is both) — the dedup shuffle and the extra
-    # checkpoint copy are skipped and every consumer reads the caller's
-    # materialization directly. Do NOT pass it for lazy pipelines: the
-    # probe + collect would re-execute them per consumer.
-    und = (pairs.select("id_a", "id_b") if edges_ready
+    # With `n_edges` every consumer reads the caller's materialization
+    # directly and the threshold probe runs zero jobs.
+    und = (pairs.select("id_a", "id_b") if n_edges is not None
            else pairs.select("id_a", "id_b").distinct().localCheckpoint())
-    # round 12: an edges_ready caller whose pair list was materialized
-    # by an eager count can hand that count over (the
-    # `_graft_materialized_count` stash minhash_dedup and the
-    # dedup_components query set) — the threshold probe then runs zero
-    # jobs instead of re-counting the cached list.
-    known_count = (getattr(pairs, "_graft_materialized_count", None)
-                   if edges_ready else None)
     # `local_threshold` is sized as "64 MB of Arrow int64" — valid only
     # for fixed-width integral/float ids. String ids (a tested path)
     # can be arbitrarily long, so byte-bound them: scale the edge cap
@@ -581,35 +553,19 @@ def connected_components(pairs: DataFrame, vertices: DataFrame,
         avg_pair_bytes = float(sample[0]["w"] or 16.0)
         eff_threshold = max(int(local_threshold * 16.0 / avg_pair_bytes),
                             65536)
-    if (known_count if known_count is not None
+    if (n_edges if n_edges is not None
             else und.count()) <= eff_threshold:
-        # Arrow-collect the edge list: a foreign session (the driver's)
-        # may have Arrow off, and the row-at-a-time fallback on a
-        # millions-of-edges list costs minutes; pin the conf for this
-        # one transfer and restore it after. NOTE (ADVICE r09): the
-        # flip mutates session-global conf for the duration of this
-        # single toPandas — not safe under CONCURRENT queries on the
-        # same SparkSession. The engine's harness is single-query-at-
-        # a-time (driver loop, bench, tests release caches between
-        # queries); a multi-tenant session should pre-set Arrow on so
-        # the flip is a no-op.
-        sess = pairs.sparkSession
-        conf_key = "spark.sql.execution.arrow.pyspark.enabled"
-        try:
-            old = sess.conf.get(conf_key)
-        except Exception:
-            old = None
-        sess.conf.set(conf_key, "true")
-        try:
-            edges_pdf = und.toPandas()
-        finally:
-            if old is not None:
-                sess.conf.set(conf_key, old)
-            else:
-                sess.conf.unset(conf_key)
-        return _components_local(sess, edges_pdf,
-                                 pairs.schema["id_a"].dataType
-                                 .simpleString(), vertices)
+        # toArrow collects through Arrow whatever the session's
+        # `arrow.pyspark.enabled` says — a caller's session may have it
+        # off, and the row-at-a-time fallback on a millions-of-edges
+        # list costs minutes
+        tbl = und.toArrow()
+        if n_edges is not None and tbl.num_rows != n_edges:
+            raise ValueError(
+                f"connected_components: n_edges={n_edges} but the edge "
+                f"list holds {tbl.num_rows} rows")
+        return _components_local(pairs.sparkSession, tbl, id_type,
+                                 vertices)
     edges = (und.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
              .unionByName(und.select(F.col("id_b").alias("a"),
                                      F.col("id_a").alias("b")))
@@ -658,7 +614,7 @@ def connected_components(pairs: DataFrame, vertices: DataFrame,
     return labels.unionByName(isolated)
 
 
-def _components_local(spark, edges_pdf, id_type: str,
+def _components_local(spark, tbl, id_type: str,
                       vertices: DataFrame) -> DataFrame:
     """Bounded-graph fast path: VECTORIZED hash-min label propagation
     over the Arrow-collected edge list. Ids are factorized via
@@ -677,11 +633,11 @@ def _components_local(spark, edges_pdf, id_type: str,
     import pandas as pd
 
     schema = f"id {id_type}, component {id_type}"
-    if not len(edges_pdf):
+    if not tbl.num_rows:
         labeled = spark.createDataFrame([], schema)
     else:
-        a = edges_pdf["id_a"].to_numpy()
-        b = edges_pdf["id_b"].to_numpy()
+        a = tbl.column("id_a").to_numpy(zero_copy_only=False)
+        b = tbl.column("id_b").to_numpy(zero_copy_only=False)
         ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
         ea = inv[:len(a)]
         eb = inv[len(a):]

@@ -110,30 +110,8 @@ def _unpack(col) -> "np.ndarray":
         .reshape(len(col), -1)
 
 
-def _adaptive_blocks(embeddings: DataFrame, n_blocks: int | None) -> int:
-    """Scale-adaptive block count for the blocked-GEMM kernels (round
-    12): with a constant n_blocks=b the GEMM stage has exactly
-    b·(b+1)/2 tasks — 10 tasks at b=4, i.e. a 32-core cluster (or a
-    32-slot local run) sits two-thirds idle through the quadratic
-    stage, and at real cluster widths the constant is simply wrong.
-    Derive b as the smallest block count whose unordered block-pair
-    count covers the default parallelism (floor 4 — below that the
-    per-group GEMM loses BLAS efficiency to fan-out). The block
-    decomposition is EXACT for any b (each unordered pair lives in
-    exactly one group; round-6 output pinned by tests + the DuckDB
-    all-pairs oracles), so b is a pure performance parameter — callers
-    with cluster knowledge can still pass it explicitly."""
-    if n_blocks is not None:
-        return n_blocks
-    par = embeddings.sparkSession.sparkContext.defaultParallelism
-    b = 4
-    while b * (b + 1) // 2 < par:
-        b += 1
-    return b
-
-
 def block_cosine_pairs(embeddings: DataFrame, threshold: float,
-                       n_blocks: int | None = 8, vec_col: str = "embedding",
+                       n_blocks: int = 8, vec_col: str = "embedding",
                        id_col: str = "vec_id") -> DataFrame:
     """All-pairs cosine above `threshold` via blocked GEMM — the scale
     path for exact near-dup over vectors.
@@ -155,7 +133,6 @@ def block_cosine_pairs(embeddings: DataFrame, threshold: float,
     import numpy as np
     import pandas as pd
 
-    n_blocks = _adaptive_blocks(embeddings, n_blocks)
     normed = _packed_normed(embeddings, n_blocks, vec_col, id_col)
     pairs_of = F.array(*[
         F.struct(
@@ -202,7 +179,7 @@ def block_cosine_pairs(embeddings: DataFrame, threshold: float,
 
 
 def block_cosine_topk(embeddings: DataFrame, k: int = 5,
-                      n_blocks: int | None = 8, vec_col: str = "embedding",
+                      n_blocks: int = 8, vec_col: str = "embedding",
                       id_col: str = "vec_id") -> DataFrame:
     """Exact all-pairs k-NN via the blocked-GEMM path: per block pair,
     keep each row's block-local top-k PLUS all boundary ties (every
@@ -215,7 +192,6 @@ def block_cosine_topk(embeddings: DataFrame, k: int = 5,
     import pandas as pd
     from pyspark.sql import Window as W
 
-    n_blocks = _adaptive_blocks(embeddings, n_blocks)
     normed = _packed_normed(embeddings, n_blocks, vec_col, id_col)
     pairs_of = F.array(*[
         F.struct(

@@ -12,8 +12,8 @@ O(steps), MC O(n_pairs), FFT O(n log n), Hugonnet O(kN). We keep all
 five as user-selectable methods and, like the reference, use
 cross-method agreement as the correctness oracle (SURVEY §5.1).
 
-Scale shapes: MC pair generation is a zip-join on pair id (no shuffle:
-ids are assigned within partitions); Hugonnet broadcasts k centers
+Scale shapes: MC is a bounded numpy kernel per polygon, run
+zone-parallel by `sigma_a_by_zone`; Hugonnet broadcasts k centers
 against the pixel table (map-side cross join + two-level agg); brute
 force stays a bounded validation path (grid_points caps N).
 """
@@ -167,13 +167,15 @@ def uniform_points_in_polygon(spark: SparkSession, wkt: str, n: int,
     return base.mapInPandas(gen, "pair_id long, x double, y double")
 
 
-def estimate_monte_carlo_np(wkt: str, sills, ranges, nugget=0.0,
-                            n_pairs: int = 100_000, seed: int = 42) -> float:
-    """The J5+A9 Monte-Carlo estimator as a bounded numpy kernel — the
-    SAME sampling streams as `estimate_monte_carlo` (shared `_sample_part`
-    math), packaged for per-zone parallelism inside `sigma_a_by_zone`
-    (many zones × 25k pairs each: zone-parallel beats cluster-wide jobs
-    issued one zone at a time)."""
+def estimate_monte_carlo(wkt: str, sills, ranges, nugget=0.0,
+                         n_pairs: int = 100_000, seed: int = 42) -> float:
+    """J5+A9 homoscedastic — σ_A² ≈ E over random point pairs (X,Y in A)
+    of C(|X−Y|) (variography_uncertainty.py:1236-1274), as a bounded
+    numpy kernel. The two point sets are the streams
+    `uniform_points_in_polygon` draws for `seed` and `seed + 1` (shared
+    `_sample_part`), paired by index. Bounded per zone, so
+    `sigma_a_by_zone` runs it zone-parallel (many zones × 25k pairs
+    each: one job wave, not one cluster job per zone)."""
     rings = parse_wkt_polygon(wkt)
     bounds = polygon_bounds(wkt)
     xa, ya, xb, yb = [], [], [], []
@@ -187,75 +189,55 @@ def estimate_monte_carlo_np(wkt: str, sills, ranges, nugget=0.0,
     return math.sqrt(max(float(cov.mean()), 0.0))
 
 
-def estimate_monte_carlo(spark: SparkSession, wkt: str, sills, ranges,
-                         nugget=0.0, n_pairs: int = 100_000,
-                         seed: int = 42) -> float:
-    """J5+A9 homoscedastic — σ_A² ≈ E over random point pairs (X,Y in A)
-    of C(|X−Y|) (variography_uncertainty.py:1236-1274). Pairing is a
-    zip-join of two independent point sets on pair index."""
-    a = uniform_points_in_polygon(spark, wkt, n_pairs, seed)
-    b = uniform_points_in_polygon(spark, wkt, n_pairs, seed + 1)
-    a = a.select(F.col("pair_id"), F.col("x").alias("xa"), F.col("y").alias("ya"))
-    b = b.select(F.col("pair_id"), F.col("x").alias("xb"), F.col("y").alias("yb"))
-    pairs = a.join(b, "pair_id")
-    dist = F.hypot(F.col("xa") - F.col("xb"), F.col("ya") - F.col("yb"))
-    var = pairs.agg(F.avg(cov_expr(dist, sills, ranges, nugget)).alias("v")) \
-               .first()["v"]
-    return math.sqrt(max(var, 0.0))
-
-
 # --------------------------------------------------------------------------
 # J6 + A12 — Hugonnet k-center shortcut
 # --------------------------------------------------------------------------
 
 def estimate_hugonnet(pixels: DataFrame, sills, ranges, nugget=0.0,
                       k_centers: int = 100, seed: int = 42,
-                      sigma2_col: str | None = None) -> float:
+                      sigma2_col: str | None = None,
+                      order_col=None) -> DataFrame:
     """J6+A12 — σ²_A = mean(σ²_px) · (mean over k random centers of
     Σ_pixels ρ(d))/N (Hugonnet et al. Eqs. 18-19;
-    variography_uncertainty.py:1322-1378).
+    variography_uncertainty.py:1322-1378), as one lazy plan returning a
+    1-row DataFrame(sigma_a). No `.first()` round-trips, so it composes
+    into larger DAGs and stays oracle-checkable.
 
     `pixels`: (x, y[, σ²]) in-polygon pixel centers. k centers are drawn
-    from the pixels themselves (deterministic hash order) and broadcast —
-    the big table never shuffles; two-level aggregate reduces. The pixel
-    table is pinned for the two actions (one multi-aggregate for
-    n/mean-σ², one for the ρ reduction) and released after — unless the
-    caller already persisted it (persisting again would raise on a
-    different storage level, and unpersisting would evict the caller's
-    cache)."""
+    from the pixels themselves (hash order) and broadcast — the big
+    table never shuffles; a two-level aggregate reduces. mean(σ²_px) is
+    the total sill (homoscedastic) unless `sigma2_col` names a
+    per-pixel variance column; its mean rides the pixel-count
+    aggregate. `order_col`: expression ranking pixels for the k-center
+    draw. Defaults to xxhash64(x, y, seed); pass an md5-based
+    expression for cross-engine-reproducible selection."""
     sill = total_sill(sills, nugget)
-    pinned_here = not pixels.is_cached
-    if pinned_here:
-        pixels.persist()
-    try:
-        # ONE multi-aggregate job for the scalar stats (count + mean σ²)
-        # instead of separate count()/avg() scans of the same lineage
-        stats_aggs = [F.count(F.lit(1)).alias("n")]
-        if sigma2_col is not None:
-            stats_aggs.append(F.avg(sigma2_col).alias("mean_s2"))
-        stats = pixels.agg(*stats_aggs).first()
-        n = stats["n"]
-        mean_sigma2 = sill if sigma2_col is None else stats["mean_s2"]
-        centers = (pixels
-                   # raw 64-bit hash as id: mod-reduced ids collided (~0.5%
-                   # at k=100) and merged two centers into one group
-                   .withColumn("_u", F.xxhash64("x", "y", F.lit(seed)))
-                   .orderBy("_u").limit(k_centers)
-                   .select(F.col("x").alias("cx"), F.col("y").alias("cy"),
-                           F.col("_u").alias("center_id")))
-        joined = pixels.crossJoin(F.broadcast(centers))
-        dist = F.hypot(F.col("x") - F.col("cx"), F.col("y") - F.col("cy"))
-        # ρ(d) = C(d)/σ², clipped to [-1, 1] (variography_uncertainty.py:1359)
-        rho = F.greatest(F.lit(-1.0), F.least(
-            F.lit(1.0), cov_expr(dist, sills, ranges, nugget) / F.lit(sill)))
-        per_center = joined.groupBy("center_id").agg(
-            F.sum(rho).alias("sum_rho"))
-        mean_sum_rho = per_center.agg(F.avg("sum_rho")).first()[0]
-    finally:
-        if pinned_here:
-            pixels.unpersist()
-    var = mean_sigma2 * mean_sum_rho / n
-    return math.sqrt(max(var, 0.0))
+    if order_col is None:
+        order_col = F.xxhash64("x", "y", F.lit(seed))
+    # raw 64-bit hash as id: mod-reduced ids collided (~0.5% at k=100)
+    # and merged two centers into one group
+    centers = (pixels.withColumn("_u", order_col)
+               .orderBy("_u").limit(k_centers)
+               .select(F.col("x").alias("cx"), F.col("y").alias("cy"),
+                       F.col("_u").alias("center_id")))
+    stats = [F.count("*").alias("n")]
+    if sigma2_col is not None:
+        stats.append(F.avg(sigma2_col).alias("mean_s2"))
+    nrow = pixels.agg(*stats)
+    mean_s2 = F.lit(sill) if sigma2_col is None else F.col("mean_s2")
+    joined = pixels.crossJoin(F.broadcast(centers))
+    dx = F.col("x") - F.col("cx")
+    dy = F.col("y") - F.col("cy")
+    dist = F.sqrt(dx * dx + dy * dy)
+    # ρ(d) = C(d)/σ², clipped to [-1, 1] (variography_uncertainty.py:1359)
+    rho = F.greatest(F.lit(-1.0), F.least(
+        F.lit(1.0), cov_expr(dist, sills, ranges, nugget) / F.lit(sill)))
+    per_center = joined.groupBy("center_id").agg(F.sum(rho).alias("sum_rho"))
+    mean_rho = per_center.agg(F.avg("sum_rho").alias("mean_sum_rho"))
+    return (mean_rho.crossJoin(nrow)
+            .select(F.sqrt(F.greatest(
+                mean_s2 * F.col("mean_sum_rho") / F.col("n"),
+                F.lit(0.0))).alias("sigma_a")))
 
 
 # --------------------------------------------------------------------------
@@ -332,39 +314,6 @@ def brute_force_rect_by_zone(zones: DataFrame, sills, ranges, nugget=0.0,
                     .alias("sigma_a")))
 
 
-def estimate_hugonnet_df(pixels: DataFrame, sills, ranges, nugget=0.0,
-                         k_centers: int = 100, seed: int = 42,
-                         order_col=None) -> DataFrame:
-    """J6+A12 as one lazy plan returning a 1-row DataFrame(sigma_a) —
-    the oracle-checkable form of `estimate_hugonnet` (same math,
-    variography_uncertainty.py:1322-1378; no driver-side `.first()`
-    round-trips, so it composes into larger DAGs).
-
-    `order_col`: expression ranking pixels for the k-center draw.
-    Defaults to xxhash64(x, y, seed) like `estimate_hugonnet`; pass an
-    md5-based expression for cross-engine-reproducible selection."""
-    sill = total_sill(sills, nugget)
-    if order_col is None:
-        order_col = F.xxhash64("x", "y", F.lit(seed))
-    centers = (pixels.withColumn("_u", order_col)
-               .orderBy("_u").limit(k_centers)
-               .select(F.col("x").alias("cx"), F.col("y").alias("cy"),
-                       F.col("_u").alias("center_id")))
-    nrow = pixels.agg(F.count("*").alias("n"))
-    joined = pixels.crossJoin(F.broadcast(centers))
-    dx = F.col("x") - F.col("cx")
-    dy = F.col("y") - F.col("cy")
-    dist = F.sqrt(dx * dx + dy * dy)
-    rho = F.greatest(F.lit(-1.0), F.least(
-        F.lit(1.0), cov_expr(dist, sills, ranges, nugget) / F.lit(sill)))
-    per_center = joined.groupBy("center_id").agg(F.sum(rho).alias("sum_rho"))
-    mean_rho = per_center.agg(F.avg("sum_rho").alias("mean_sum_rho"))
-    return (mean_rho.crossJoin(nrow)
-            .select(F.sqrt(F.greatest(
-                F.lit(sill) * F.col("mean_sum_rho") / F.col("n"),
-                F.lit(0.0))).alias("sigma_a")))
-
-
 # --------------------------------------------------------------------------
 # A10 — FFT footprint estimator (per-zone numpy kernel)
 # --------------------------------------------------------------------------
@@ -434,7 +383,7 @@ def sigma_a_by_zone(zones: DataFrame, sills, ranges, nugget=0.0,
             if method == "fft":
                 v = estimate_fft(row.wkt, s, r, n, gp)
             elif method == "monte_carlo":
-                v = estimate_monte_carlo_np(row.wkt, s, r, n, np_pairs, seed)
+                v = estimate_monte_carlo(row.wkt, s, r, n, np_pairs, seed)
             else:
                 v = estimate_analytical(polygon_area(row.wkt), s, r, n, ns)
             out.append({"zone_id": row.zone_id, "sigma_a": v})
@@ -455,7 +404,7 @@ def estimate_sigma_a(spark: SparkSession, wkt: str, sills, ranges, nugget=0.0,
         return estimate_analytical(polygon_area(wkt), sills, ranges, nugget,
                                    kw.get("num_steps", 1000))
     if method == "monte_carlo":
-        return estimate_monte_carlo(spark, wkt, sills, ranges, nugget,
+        return estimate_monte_carlo(wkt, sills, ranges, nugget,
                                     kw.get("n_pairs", 100_000),
                                     kw.get("seed", 42))
     if method == "brute_force":

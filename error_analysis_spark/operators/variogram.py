@@ -60,16 +60,6 @@ class VariogramParams:
     seed: int = 42
 
 
-def bbox_diagonal(df: DataFrame, x: str = "x", y: str = "y") -> float:
-    """Bounding-box diagonal of the valid sample domain
-    (variography_uncertainty.py:386-397)."""
-    r = df.agg(
-        F.min(x).alias("x0"), F.max(x).alias("x1"),
-        F.min(y).alias("y0"), F.max(y).alias("y1"),
-    ).first()
-    return math.hypot(r["x1"] - r["x0"], r["y1"] - r["y0"])
-
-
 def resolve_max_lag(diag: float, multiplier: float | str) -> float:
     """max_lag from the multiplier spec (variography_uncertainty.py:386-397):
     a float scales the diagonal; 'max' uses the full diagonal; 'median'
@@ -81,64 +71,26 @@ def resolve_max_lag(diag: float, multiplier: float | str) -> float:
     return float(multiplier) * diag
 
 
-def sample_pixels(pixels: DataFrame, params: VariogramParams, res: float,
-                  run: int = 0, id_col: str | None = None,
-                  value: str = "value", n_valid: int | None = None) -> DataFrame:
-    """R6 — seeded random sample of valid pixels
-    (variography_uncertainty.py:160-219).
-
-    Target n = valid_count · res² · samples_per_area / area_side², capped by
-    max_samples (:196-201). Selection = smallest-u order statistic on the
-    deterministic hash: filter to ~1.5× the target fraction first (cheap,
-    pushed to the scan), exact top-n on the survivors. Returns
-    (sample_id, x, y, value, run).
-    """
-    if id_col is None:
-        pixels = pixels.withColumn(
-            "_pid", F.col("row").cast("long") * F.lit(1 << 31) + F.col("col"))
-        id_col = "_pid"
-    valid = pixels.where(F.col(value).isNotNull() & ~F.isnan(value))
-    if n_valid is None:
-        # NOTE: an eager count per call — multi-run drivers should count
-        # once and pass `n_valid` (empirical_variogram does)
-        n_valid = valid.count()
-    if n_valid == 0:
-        raise ValueError("no valid pixels to sample")  # :204-208 validation
-    n_target = min(
-        int(params.max_samples),
-        max(1, int(n_valid * (res ** 2) * params.samples_per_area
-                   / (params.area_side ** 2))),
-    )
-    n_target = min(n_target, n_valid)
-    u = _uniform_hash(F.col(id_col), params.seed, F.lit(run))
-    # Bernoulli pre-filter sized so P(survivors < n_target) is negligible
-    # even for small targets (mean = 1.5·target + 6·√target + 16; a bare
-    # 1.5× multiplier undersamples ~5-10% of the time at target ≈ 10)
-    frac = min(1.0, (1.5 * n_target + 6.0 * n_target ** 0.5 + 16.0) / n_valid)
-    cand = valid.withColumn("_u", u).where(F.col("_u") < F.lit(frac))
-    out = (cand.orderBy("_u").limit(n_target)
-           .select(F.col(id_col).alias("sample_id"), "x", "y",
-                   F.col(value).alias("value"))
-           .withColumn("run", F.lit(run)))
-    return out
-
-
 def sample_pixels_multi(valid: DataFrame, params: VariogramParams, res: float,
                         n_runs: int, n_valid: int,
                         value: str = "value") -> DataFrame:
-    """R6 × n_runs in ONE pass: every pixel fans out to all runs
-    (explode), keeps only rows whose deterministic u falls under ~1.5×
-    the target fraction (cheap pre-filter — the fan-out never
-    materializes beyond the survivors), then one per-run window
-    row_number ≤ target picks the exact smallest-u sample.
+    """R6 × n_runs in ONE pass — seeded random samples of the valid
+    pixels (variography_uncertainty.py:160-219). `valid` must already be
+    filtered to non-null values and hold `n_valid` rows.
 
-    Replaces n_runs separate sort-limit jobs with a single narrow job —
-    per-job latency dominates multi-run sampling otherwise (each run is
-    only a few thousand rows). Selection is identical to per-run
-    `sample_pixels`: same hash, same order statistic.
+    Target n = n_valid · res² · samples_per_area / area_side², capped by
+    max_samples (:196-201). Every pixel fans out to all runs (explode),
+    keeps only rows whose deterministic u falls under ~1.5× the target
+    fraction (cheap pre-filter — the fan-out never materializes beyond
+    the survivors), then one per-run window row_number ≤ target picks
+    the exact smallest-u sample. One narrow job for all runs: per-job
+    latency would dominate n_runs separate sort-limit jobs (each run is
+    only a few thousand rows). Returns (sample_id, x, y, value, run).
     """
     from pyspark.sql import Window as W
 
+    if n_valid == 0:
+        raise ValueError("no valid pixels to sample")  # :204-208 validation
     n_target = min(
         int(params.max_samples),
         max(1, int(n_valid * (res ** 2) * params.samples_per_area
@@ -203,7 +155,7 @@ def sample_pixels_multi_lazy(valid: DataFrame, params: VariogramParams,
                         * F.lit(float(params.samples_per_area))
                         / F.lit(float(params.area_side ** 2)))),
             F.col("_nv")).alias("_nt"))
-    # same shortfall-safe sizing as sample_pixels/sample_pixels_multi:
+    # same shortfall-safe sizing as sample_pixels_multi:
     # mean survivors = 1.5·target + 6·√target + 16
     tgt = tgt.withColumn(
         "_thr",
@@ -314,8 +266,8 @@ def mean_variogram(per_run: DataFrame, bin_width: float) -> DataFrame:
     )
 
 
-def empirical_variogram(pixels: DataFrame, params: VariogramParams, res: float,
-                        exact_join: bool = False) -> tuple[DataFrame, float]:
+def empirical_variogram(pixels: DataFrame, params: VariogramParams,
+                        res: float) -> tuple[DataFrame, float]:
     """Full multi-run pipeline: n_runs × (R6 → J4 → A3 → A4) → A5.
 
     Returns (mean variogram DataFrame, max_lag). Runs are unioned into one
@@ -331,9 +283,8 @@ def empirical_variogram(pixels: DataFrame, params: VariogramParams, res: float,
     n_bins = int(max_lag / params.bin_width) + 1
     if n_bins > params.max_n_bins:
         max_lag = params.max_n_bins * params.bin_width  # :398-401 bin cap
-    # all runs drawn in one narrow job (identical selection to per-run
-    # sample_pixels — same hash order statistic), materialized once so
-    # both sides of the pair self-join read the tiny cached sample set
+    # all runs drawn in one narrow job, materialized once so both
+    # sides of the pair self-join read the tiny cached sample set
     samples = sample_pixels_multi(valid, params, res, params.n_runs,
                                   n_valid).cache()
     samples.count()
@@ -342,6 +293,5 @@ def empirical_variogram(pixels: DataFrame, params: VariogramParams, res: float,
     # analyze_pair calls don't accumulate raster-sized executor caches;
     # only the tiny sample set stays cached for the pair self-join
     valid.unpersist()
-    per_run = matheron(pair_bins(samples, max_lag, params.bin_width,
-                                 exact=exact_join))
+    per_run = matheron(pair_bins(samples, max_lag, params.bin_width))
     return mean_variogram(per_run, params.bin_width), max_lag

@@ -154,7 +154,7 @@ def analyze_pair_chain(a: DataFrame, b: DataFrame,
                        max_lag: float = 30.0, bin_width: float = 6.0,
                        min_pairs: int = 30,
                        sills=(0.04,), ranges=(30.0,), nugget: float = 0.002,
-                       k_centers: int = 40, reuse: bool = True) -> DataFrame:
+                       k_centers: int = 40) -> DataFrame:
     """E3 — the whole analyze_pair relational spine as ONE lazy DAG
     returning a single labeled-union DataFrame (stage, k, n, v1, v2,
     v3): align (J1/R1) → difference (R4) → median bias over the stable
@@ -185,16 +185,15 @@ def analyze_pair_chain(a: DataFrame, b: DataFrame,
     zoned = dod.withColumn(
         "zone_id", ((F.col("row") * 7 + F.col("col")) % n_zones)
         .cast("bigint"))
-    if reuse:
-        # every stage (bias, zonal, variogram, sigma_A) branches from
-        # the zoned DoD; without a pin each union branch re-reads and
-        # re-aligns the raster pair. persist() is LAZY — construction
-        # still runs zero jobs — and the cache registers with cachereg
-        # so the harness releases it after the query's action (same
-        # discipline as the dedup pair lists). Pinning ZONED (pre-bias)
-        # rather than the corrected DoD also covers the bias branch and
-        # the bias broadcast build.
-        zoned = track(zoned.persist(StorageLevel.MEMORY_AND_DISK))
+    # every stage (bias, zonal, variogram, sigma_A) branches from the
+    # zoned DoD; without a pin each union branch re-reads and re-aligns
+    # the raster pair. persist() is LAZY — construction still runs zero
+    # jobs — and the cache registers with cachereg so the harness
+    # releases it after the query's action (same discipline as the
+    # dedup pair lists). Pinning ZONED (pre-bias) rather than the
+    # corrected DoD also covers the bias branch and the bias broadcast
+    # build.
+    zoned = track(zoned.persist(StorageLevel.MEMORY_AND_DISK))
     stable = zoned.where(F.col("zone_id") == stable_zone)
 
     # A6 + row count in ONE aggregate; stays a 1-row lazy DataFrame
@@ -247,7 +246,7 @@ def analyze_pair_chain(a: DataFrame, b: DataFrame,
     spx = (corr.where(F.col("zone_id") == sigma_zone)
            .select((F.col("row").cast("bigint") * common.width
                     + F.col("col")).alias("px_id"), "x", "y"))
-    sig = UN.estimate_hugonnet_df(
+    sig = UN.estimate_hugonnet(
         spx, list(sills), list(ranges), nugget, k_centers=k_centers,
         order_col=F.md5(F.col("px_id").cast("string")))
     sigma_stage = sig.select(
@@ -267,8 +266,7 @@ def analyze_pair_chain_multi(a: DataFrame, b: DataFrame,
                              min_pairs: int = 30, n_runs: int = 4,
                              max_samples: int = 120,
                              samples_per_area: float = 10_000.0,
-                             seed: int = 42,
-                             reuse: bool = True) -> DataFrame:
+                             seed: int = 42) -> DataFrame:
     """E3 with the reference's CANONICAL multi-run variography: align
     (J1/R1) → difference (R4) → median bias (A6, 1-row broadcast) →
     bias subtract (R5) → seeded n_runs-fold sampling of the stable
@@ -302,10 +300,9 @@ def analyze_pair_chain_multi(a: DataFrame, b: DataFrame,
     zoned = dod.withColumn(
         "zone_id", ((F.col("row") * 7 + F.col("col")) % n_zones)
         .cast("bigint"))
-    if reuse:
-        # same pin discipline as analyze_pair_chain: bias, the sample
-        # draw and the per-run pair join all branch from the zoned DoD
-        zoned = track(zoned.persist(StorageLevel.MEMORY_AND_DISK))
+    # same pin discipline as analyze_pair_chain: bias, the sample draw
+    # and the per-run pair join all branch from the zoned DoD
+    zoned = track(zoned.persist(StorageLevel.MEMORY_AND_DISK))
     stable = zoned.where(F.col("zone_id") == stable_zone)
     bias_row = stable.agg(
         F.expr("percentile(dz, 0.5)").alias("bias"),
@@ -321,21 +318,18 @@ def analyze_pair_chain_multi(a: DataFrame, b: DataFrame,
                              n_runs=n_runs, seed=seed)
     samples = sample_pixels_multi_lazy(stable_c, params, res=common.res,
                                        n_runs=n_runs)
-    if reuse:
-        # second lazy pin: the pair join probes `samples` on BOTH
-        # sides — unpinned, each side re-runs the fan-out + per-run
-        # selection window
-        samples = track(samples.persist(StorageLevel.MEMORY_AND_DISK))
+    # second lazy pin: the pair join probes `samples` on BOTH sides —
+    # unpinned, each side re-runs the fan-out + per-run selection window
+    samples = track(samples.persist(StorageLevel.MEMORY_AND_DISK))
     per_run = matheron(
         pair_bins(samples, max_lag=max_lag, bin_width=bin_width)
         .withColumn("ssd_dec", F.col("ssd"))
         .withColumn("ssd", F.col("ssd").cast("double")),
         min_pairs=min_pairs)
-    if reuse:
-        # third lazy pin: `per_run` (≤ n_runs × n_bins rows) feeds both
-        # the vario rows and the A5 reduce — pinned, the whole
-        # sample → pair-join pipeline runs exactly once
-        per_run = track(per_run.persist(StorageLevel.MEMORY_AND_DISK))
+    # third lazy pin: `per_run` (≤ n_runs × n_bins rows) feeds both the
+    # vario rows and the A5 reduce — pinned, the whole sample →
+    # pair-join pipeline runs exactly once
+    per_run = track(per_run.persist(StorageLevel.MEMORY_AND_DISK))
     reduced = mean_variogram(per_run, bin_width=bin_width)
 
     slots = ["stage", "run", "k", "n", "v1", "v2", "v3", "v4"]

@@ -1332,7 +1332,6 @@ def q08_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, and the share numerator/denominator come from ONE
     conditional aggregation over it (no second pass). Fixed-point
     revenue; the share divides two exact integers."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region") \
         .where(F.col("r_name") == _Q08_REGION)
@@ -1507,7 +1506,6 @@ def q07_bination_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     before broadcasting, so the only corpus exchange is the orderkey
     fact-fact join; the (supp_nation, cust_nation, year) aggregate is
     bounded by 2×2×years."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     nation = load_table(spark, sf_dir, "nation") \
         .where(F.col("n_name").isin(_Q07_N1, _Q07_N2)) \
         .select("n_nationkey", "n_name")
@@ -1569,7 +1567,6 @@ def q09_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     Part and supplier⋈nation broadcast onto lineitem; the orderkey
     fact-fact join is the one big exchange; profit terms are
     fixed-pointed per row before the (nation, year) sum."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     nation = load_table(spark, sf_dir, "nation") \
         .select("n_nationkey", "n_name")
     supp = (load_table(spark, sf_dir, "supplier")

@@ -577,7 +577,7 @@ _LSH_PERM, _LSH_BANDS, _LSH_THRESH = 16, 4, 0.35
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") % 2 == 0)
     return DD.minhash_dedup(docs, num_perm=_LSH_PERM, bands=_LSH_BANDS,
-                            threshold=_LSH_THRESH)
+                            threshold=_LSH_THRESH)[0]
 
 
 MINHASH_LSH_SQL = f"""
@@ -775,8 +775,7 @@ def sim_pairwise_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     window prune); oracle = naive all-pairs SQL, so a MATCH proves the
     block decomposition returns the identical neighbor lists."""
     emb = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") % 5 == 0)
-    # n_blocks omitted (round 12): scale-adaptive block count —
-    # see similarity._adaptive_blocks; decomposition exact for any b
+    # default n_blocks=8; the decomposition is exact for any block count
     return SIM.block_cosine_topk(emb, k=_KNN_K)
 
 
@@ -814,7 +813,6 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     the naive all-pairs SQL — a MATCH proves the block decomposition
     exact (same pairs, same rounded sims)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    # n_blocks omitted (round 12): scale-adaptive block count
     return SIM.block_cosine_pairs(emb, threshold=_EMB_THRESH)
 
 
@@ -1220,10 +1218,10 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     the single block-pair group (min(b), max(b)); diagonal groups emit
     the strict upper triangle, cross groups each matrix cell once), so
     the pair list is DISTINCT already — persist+count materializes it
-    and `edges_ready=True` skips connected_components' edge-dedup
-    shuffle and localCheckpoint copy; the stashed count also skips the
-    threshold-probe count job. Same fixpoint labeling either way
-    (parity pinned in tests/test_round12_opt.py)."""
+    and passing that count as `n_edges` skips connected_components'
+    edge-dedup shuffle, localCheckpoint copy and threshold-probe count
+    job. Same fixpoint labeling either way (parity pinned in
+    tests/test_round12_opt.py)."""
     from pyspark.storagelevel import StorageLevel
 
     from error_analysis_spark.cachereg import track
@@ -1232,9 +1230,8 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = track(
         SIM.block_cosine_pairs(emb, threshold=_EMB_THRESH)
         .persist(StorageLevel.MEMORY_AND_DISK))
-    pairs._graft_materialized_count = pairs.count()
     vertices = emb.select(F.col("vec_id").alias("id"))
-    comp = DD.connected_components(pairs, vertices, edges_ready=True)
+    comp = DD.connected_components(pairs, vertices, n_edges=pairs.count())
     return comp.groupBy("component").agg(
         F.count("*").alias("cluster_size"),
         F.max("id").alias("max_id"),

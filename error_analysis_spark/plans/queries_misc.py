@@ -338,16 +338,14 @@ def sigma_a_hugonnet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J6+A12 over event-derived pixel centers: 60 centers ranked by
     md5(event_id) (cross-engine-reproducible draw), ρ(d) summed per
     center, averaged, scaled by σ²/N — one lazy plan, 1 row."""
-    from error_analysis_spark.operators.uncertainty import (
-        estimate_hugonnet_df,
-    )
+    from error_analysis_spark.operators.uncertainty import estimate_hugonnet
     ev = load_table(spark, sf_dir, "events")
     px = ev.select(
         F.col("event_id").cast("bigint").alias("px_id"),
         (F.col("event_id") % 100).cast("double").alias("x"),
         (F.col("event_id") / 100).cast("int").cast("double").alias("y"),
     )
-    out = estimate_hugonnet_df(
+    out = estimate_hugonnet(
         px, [0.04], [25.0], 0.002, k_centers=60,
         order_col=F.md5(F.col("px_id").cast("string")))
     return out.select(F.round("sigma_a", 6).alias("sigma_a"))
@@ -578,7 +576,6 @@ _SESS_GAP_MIN = 30
 
 def w4_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from error_analysis_spark.operators import temporal as TP
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     return TP.sessionize(ev, gap_minutes=_SESS_GAP_MIN)
 
@@ -614,7 +611,6 @@ FROM g GROUP BY user_id, sid
 
 def j10_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from error_analysis_spark.operators import temporal as TP
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     purchases = ev.where(F.col("event_type") == "purchase")
     views = ev.where(F.col("event_type") == "view")
@@ -654,7 +650,6 @@ def w5_rolling_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     hour" feature; RANGE frame so timestamp ties are peers in every
     engine."""
     from error_analysis_spark.operators import temporal as TP
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     return TP.rolling_stats(ev, window_minutes=_ROLL_MIN)
 
@@ -683,7 +678,6 @@ def w7_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional min-aggregates, every join co-partitioned on the user
     key. Per-user step timestamps (epoch micros, NULL once dropped)."""
     from error_analysis_spark.operators import temporal as TP
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     wide = TP.funnel_steps(ev, _FUNNEL_STEPS)
     return wide.select(
@@ -723,7 +717,6 @@ def w8_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     + one co-partitioned join; the distinct is bounded by
     keys x active weeks."""
     from error_analysis_spark.operators import temporal as TP
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     return TP.cohort_retention(ev)
 
@@ -771,7 +764,6 @@ def w9_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the oracle gates the ranked form — a 0-row check verifies
     nothing.)"""
     from error_analysis_spark.operators import temporal as TP
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     out = TP.anomaly_days(ev, trailing_days=_ANOM_DAYS, z=_ANOM_Z,
                           min_baseline=_ANOM_MIN, top_k=_ANOM_K)
@@ -820,7 +812,6 @@ def w10_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     five exact-integer moment sums in ONE map-side-combinable
     aggregation — no window, no sort, no second pass at any scale."""
     from error_analysis_spark.operators import temporal as TP
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     return TP.trend_slope(ev)
 
@@ -864,7 +855,6 @@ def w11_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_type changed vs the previous event — the lag-window change-
     detection idiom. Window partitions per user (bounded), output is
     the transition log keyed (user, ts)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     d = (ev.select("user_id", "event_id", "event_type",
                    F.unix_micros(F.col("ts").cast("timestamp"))
@@ -900,7 +890,6 @@ def w12_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     The pair log collapses to a (from, to) count table bounded by
     |event types|²; the row-normalizing totals join broadcast. The
     probability divides two exact integers, rounded once."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     d = (ev.select("user_id", "event_id", "event_type",
                    F.unix_micros(F.col("ts").cast("timestamp"))

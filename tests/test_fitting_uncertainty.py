@@ -86,7 +86,7 @@ def test_sigma_a_methods_agree(spark):
     ana = UN.estimate_analytical(UN.polygon_area(RECT), SILLS, RANGES, NUGGET)
     brute = UN.estimate_brute_force(spark, RECT, SILLS, RANGES, NUGGET,
                                     grid_points=60)
-    mc = UN.estimate_monte_carlo(spark, RECT, SILLS, RANGES, NUGGET,
+    mc = UN.estimate_monte_carlo(RECT, SILLS, RANGES, NUGGET,
                                  n_pairs=60_000, seed=42)
     fft = UN.estimate_fft(RECT, SILLS, RANGES, NUGGET, grid_points=128)
     # brute force is the ground truth for this polygon; the analytical
@@ -101,7 +101,8 @@ def test_sigma_a_methods_agree(spark):
     xx, yy = np.meshgrid(xs, ys)
     pix = spark.createDataFrame(
         pd.DataFrame({"x": xx.ravel(), "y": yy.ravel()}))
-    hug = UN.estimate_hugonnet(pix, SILLS, RANGES, NUGGET, k_centers=80)
+    hug = UN.estimate_hugonnet(pix, SILLS, RANGES, NUGGET,
+                               k_centers=80).first()["sigma_a"]
     assert abs(hug - brute) / brute < 0.15
 
 
@@ -135,18 +136,27 @@ def test_brute_rect_by_zone_matches_single_zone(spark):
     assert out[0]["sigma_a"] == pytest.approx(fine, rel=0.10)
 
 
-def test_hugonnet_df_matches_float_form(spark):
-    """estimate_hugonnet_df (lazy 1-row plan) ≡ estimate_hugonnet
-    (driver floats) with the identical xxhash64 center draw."""
+def test_hugonnet_heteroscedastic_sigma2_col(spark):
+    """The per-pixel σ² path (J8): a σ² column constant at the total
+    sill reproduces the homoscedastic value, and scaling that column by
+    k scales σ_A by √k."""
     xs = np.linspace(10, 990, 40)
     ys = np.linspace(10, 590, 25)
     xx, yy = np.meshgrid(xs, ys)
-    pix = spark.createDataFrame(
-        pd.DataFrame({"x": xx.ravel(), "y": yy.ravel()}))
-    want = UN.estimate_hugonnet(pix, SILLS, RANGES, NUGGET, k_centers=50)
-    got = UN.estimate_hugonnet_df(pix, SILLS, RANGES, NUGGET,
-                                  k_centers=50).collect()[0]["sigma_a"]
-    assert got == pytest.approx(want, rel=1e-9)
+    sill = UN.total_sill(SILLS, NUGGET)
+    k = 3.7
+    pix = spark.createDataFrame(pd.DataFrame({
+        "x": xx.ravel(), "y": yy.ravel(), "s2": sill, "s2k": k * sill}))
+
+    def sigma_a(**kw):
+        return UN.estimate_hugonnet(pix, SILLS, RANGES, NUGGET, k_centers=50,
+                                    **kw).first()["sigma_a"]
+
+    homo = sigma_a()
+    assert homo > 0
+    assert sigma_a(sigma2_col="s2") == pytest.approx(homo, rel=1e-12)
+    assert sigma_a(sigma2_col="s2k") == pytest.approx(math.sqrt(k) * homo,
+                                                      rel=1e-9)
 
 
 def test_closed_form_and_quadrature():
@@ -209,17 +219,6 @@ def test_aic_ranking_fixture(spark):
     best_1comp = min(per3[0], per3[1])
     assert best_2comp < best_1comp
     assert int(best3["n_comp"]) >= 2
-
-
-def test_monte_carlo_np_matches_distributed(spark):
-    """The per-zone numpy MC kernel (used by sigma_a_by_zone) shares the
-    exact sampling streams with the distributed estimator — same seeds
-    must give the same estimate up to float summation order."""
-    mc = UN.estimate_monte_carlo(spark, RECT, SILLS, RANGES, NUGGET,
-                                 n_pairs=30_000, seed=7)
-    mc_np = UN.estimate_monte_carlo_np(RECT, SILLS, RANGES, NUGGET,
-                                       n_pairs=30_000, seed=7)
-    assert mc_np == pytest.approx(mc, rel=1e-9)
 
 
 def test_uniform_points_deterministic(spark):

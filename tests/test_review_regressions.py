@@ -199,9 +199,8 @@ def test_minhash_signature_plan_has_no_exchange(spark):
 
 def test_banded_signatures_match_long_form(spark):
     """Row-local banding (banded_signatures) is byte-identical to
-    aggregating the long signature format (lsh_candidate_pairs' input
-    contract): same (id, band, sig) set, so both forms yield the same
-    candidates."""
+    grouping the long `minhash_signatures` format by band: same
+    (id, band, sig) set, so both forms yield the same candidates."""
     import pandas as pd
 
     from error_analysis_spark.extensions import dedup as DD

@@ -210,7 +210,7 @@ def test_minhash_dedup_candidate_guard_equivalence(spark):
     docs = spark.read.parquet(
         "/root/testdata/sf0.01/documents.parquet").limit(350)
 
-    got = DD.minhash_dedup(docs, num_perm=16, bands=4, threshold=0.6)
+    got, _ = DD.minhash_dedup(docs, num_perm=16, bands=4, threshold=0.6)
     got_rows = sorted((r.id_a, r.id_b, r.jaccard) for r in got.collect())
     got.unpersist()
 
@@ -241,9 +241,9 @@ def test_minhash_dedup_candidate_guard_equivalence(spark):
     assert got_rows == ref_rows and len(got_rows) > 0
 
 
-def test_connected_components_edges_ready_parity(spark):
-    """edges_ready=True (skip the dedup shuffle + checkpoint copy for
-    caller-asserted distinct, materialized edge lists) produces the
+def test_connected_components_n_edges_parity(spark):
+    """n_edges (skip the dedup shuffle, checkpoint copy and probe count
+    for caller-asserted distinct, materialized edge lists) produces the
     identical labeling as the default path — chain + blob + isolated
     vertices, both below and above the local threshold."""
     import pandas as pd
@@ -266,9 +266,31 @@ def test_connected_components_edges_ready_parity(spark):
     expect = [(1, 1), (2, 1), (3, 1), (4, 1),
               (10, 10), (11, 10), (12, 10), (99, 99)]
     assert labels() == expect
-    assert labels(edges_ready=True) == expect
-    # distributed path (threshold 0 forces it) with edges_ready
-    assert labels(edges_ready=True, local_threshold=0) == expect
+    assert labels(n_edges=6) == expect
+    # distributed path (threshold 0 forces it) with n_edges
+    assert labels(n_edges=6, local_threshold=0) == expect
+    edges.unpersist()
+    # an empty edge list labels every vertex as its own component
+    none = spark.createDataFrame([], "id_a long, id_b long")
+    assert sorted((r.id, r.component) for r in DD.connected_components(
+        none, verts, n_edges=0).collect()) == [(v, v) for v, _ in expect]
+
+
+def test_connected_components_wrong_n_edges_raises(spark):
+    """A stated n_edges that disagrees with the collected edge list
+    fails loudly on the local path instead of labeling silently."""
+    import pandas as pd
+    import pytest
+
+    from error_analysis_spark.extensions import dedup as DD
+
+    edges = spark.createDataFrame(pd.DataFrame({
+        "id_a": [1, 2, 10], "id_b": [2, 3, 11]})).persist()
+    edges.count()
+    verts = spark.createDataFrame(pd.DataFrame({"id": [1, 2, 3, 10, 11]}))
+    for wrong in (2, 4):
+        with pytest.raises(ValueError, match="n_edges"):
+            DD.connected_components(edges, verts, n_edges=wrong)
     edges.unpersist()
 
 

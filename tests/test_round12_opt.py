@@ -48,10 +48,9 @@ def test_funnel_stats_observation_parity(spark):
 
 
 def test_block_cosine_pairs_distinct_and_cc_parity(spark):
-    """dedup_components (round 12) asserts edges_ready for the
-    blocked-GEMM pair list: (a) the pair list is distinct by
-    construction, (b) connected_components over it with
-    edges_ready=True (+ the stashed count) labels identically to the
+    """dedup_components (round 12) passes n_edges for the blocked-GEMM
+    pair list: (a) the pair list is distinct by construction, (b)
+    connected_components over it with n_edges labels identically to the
     default dedup+checkpoint path."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     from error_analysis_spark.extensions import dedup as DD
@@ -62,25 +61,25 @@ def test_block_cosine_pairs_distinct_and_cc_parity(spark):
     n = pairs.count()
     assert n == pairs.select("id_a", "id_b").distinct().count()
     assert n > 0
-    # round 12: the adaptive block count (n_blocks=None) is a pure
-    # performance parameter — identical pair list at any block count
-    adaptive = SIM.block_cosine_pairs(emb, threshold=0.35)
-    assert (sorted(map(tuple, adaptive.collect()))
+    # the block count is a pure performance parameter — the default
+    # n_blocks=8 gives the identical pair list to n_blocks=4
+    default = SIM.block_cosine_pairs(emb, threshold=0.35)
+    assert (sorted(map(tuple, default.collect()))
             == sorted(map(tuple, pairs.collect())))
 
     verts = emb.select(F.col("vec_id").alias("id"))
     ready = pairs.persist()
-    ready._graft_materialized_count = ready.count()
+    n_ready = ready.count()
 
     def labels(p, **kw):
         return sorted((r.id, r.component) for r in
                       DD.connected_components(p, verts, **kw).collect())
 
     base = labels(pairs)
-    assert labels(ready, edges_ready=True) == base
-    # a stashed count must not change the labeling on the distributed
-    # path either (threshold 0 forces it)
-    assert labels(ready, edges_ready=True, local_threshold=0) == base
+    assert labels(ready, n_edges=n_ready) == base
+    # n_edges must not change the labeling on the distributed path
+    # either (threshold 0 forces it)
+    assert labels(ready, n_edges=n_ready, local_threshold=0) == base
     ready.unpersist()
 
 
@@ -156,9 +155,9 @@ def test_lsh_topk_pinned_unchanged(spark):
     assert len(got) > 0
 
 
-def test_minhash_count_stash_matches_true_count(spark):
-    """minhash_dedup stashes its eager result count for the CC
-    threshold probe — the stash must equal the true row count."""
+def test_minhash_dedup_returned_count_matches_true_count(spark):
+    """minhash_dedup returns its eager result count for CC's n_edges —
+    it must equal the true row count."""
     docs = spark.createDataFrame(pd.DataFrame({
         "doc_id": range(8),
         "text": ["the quick brown fox jumps over the lazy dog",
@@ -170,6 +169,7 @@ def test_minhash_count_stash_matches_true_count(spark):
                  "short one",
                  "short one two"]}))
     from error_analysis_spark.extensions import dedup as DD
-    pairs = DD.minhash_dedup(docs, num_perm=16, bands=4, threshold=0.35)
-    assert pairs._graft_materialized_count == pairs.count()
+    pairs, n_pairs = DD.minhash_dedup(docs, num_perm=16, bands=4,
+                                      threshold=0.35)
+    assert n_pairs == pairs.count()
     pairs.unpersist()

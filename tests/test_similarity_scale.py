@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from error_analysis_spark.extensions import similarity as SIM
 from error_analysis_spark.operators.variogram import (
-    VariogramParams, sample_pixels,
+    VariogramParams, sample_pixels_multi,
 )
 
 
@@ -66,8 +66,8 @@ def test_sampling_partition_independent(spark):
     key = ["run", "sample_id"]
     frames = []
     for df in (df1, df8):
-        runs = [sample_pixels(df, params, res=1.0, run=r) for r in (0, 1)]
-        s = runs[0].unionByName(runs[1]).toPandas()
+        s = sample_pixels_multi(df, params, res=1.0, n_runs=2,
+                                n_valid=df.count()).toPandas()
         frames.append(s.sort_values(key).reset_index(drop=True)[key])
     pd.testing.assert_frame_equal(frames[0], frames[1])
 
