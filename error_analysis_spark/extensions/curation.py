@@ -94,7 +94,7 @@ def curate_documents(docs: DataFrame, cfg: CurationConfig | None = None,
     s1 = s1df.where(passes_q)
 
     obs2 = Observation("funnel_s2_out")
-    s2 = (TX.lang_scores(s1, text_col, id_col)
+    s2 = (TX.lang_scores(s1, text_col)
           .select(*s1.columns, "pred_lang")
           .where(F.col("pred_lang").isin(*cfg.keep_langs))
           .observe(obs2, F.count(F.lit(1)).alias("n2")))

@@ -125,18 +125,16 @@ def _argmax_lang(scored: DataFrame) -> DataFrame:
     return scored.withColumn("pred_lang", pred)
 
 
-def lang_scores(df: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
+def lang_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Language-ID heuristic: per-language stopword hit-rate over tokens
     (occurrence count, duplicates included), CJK-character rate for zh;
-    predicted = argmax score.
+    predicted = argmax score. Annotates in place: every input column
+    survives, plus score_<lang> per language and pred_lang.
 
-    The built-in profiles are plan-time constants (~10 words/language),
-    so each language's hit count is one row-local
+    The built-in profiles (`STOPWORDS`) are plan-time constants (~10
+    words/language), so each language's hit count is one row-local
     size(filter(array_contains)) expression — no explode, no join, no
-    shuffle. For a LARGE stopword dictionary (thousands of entries,
-    runtime-loaded) use `lang_scores_join`, which broadcasts the
-    (token, lang) table instead of inlining it into codegen."""
+    shuffle."""
     base = df.select(
         "*",
         tokens(F.lower(F.col(text_col))).alias("_toks"),
@@ -160,43 +158,6 @@ def lang_scores(df: DataFrame, text_col: str = "text",
         "pred_lang",
         F.when(F.size(tokens(F.lower(F.col(text_col)))) > 0,
                F.col("pred_lang")))
-
-
-def lang_scores_join(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """Broadcast-join form of `lang_scores` for large runtime stopword
-    dictionaries: explode tokens → broadcast join against the
-    (token, lang) table → pivot counts per language. One shuffle on doc
-    id; the dictionary never inlines into codegen. Identical output to
-    `lang_scores` on the built-in profiles (pinned by test), including
-    the annotate-in-place column contract: ALL input columns survive,
-    so the two forms are drop-in interchangeable (curate_documents
-    selects `*input.columns` from the output)."""
-    spark = df.sparkSession
-    sw_rows = [(w, lg) for lg, ws in STOPWORDS.items() for w in ws]
-    sw_tbl = spark.createDataFrame(sw_rows, ["token", "lang"])
-    base = df.select(
-        "*",
-        (F.length(F.regexp_replace(F.col(text_col), r"[^一-鿿]", ""))
-         .cast("double") / _nz(F.length(text_col))).alias("score_zh"),
-    ).withColumn("n_tok", F.size(tokens(F.lower(F.col(text_col)))))
-    hits = (
-        df.select(id_col,
-                  F.explode(tokens(F.lower(F.col(text_col)))).alias("token"))
-        .join(F.broadcast(sw_tbl), "token")
-        .groupBy(id_col).pivot("lang", list(STOPWORDS)).count()
-    )
-    scored = base.join(hits, id_col, "left")
-    for lg in STOPWORDS:
-        scored = scored.withColumn(
-            f"score_{lg}",
-            F.coalesce(F.col(lg), F.lit(0)).cast("double")
-            / _nz(F.col("n_tok")),
-        ).drop(lg)
-    out = _argmax_lang(scored)
-    return (out.withColumn("pred_lang",
-                           F.when(F.col("n_tok") > 0, F.col("pred_lang")))
-            .drop("n_tok"))
 
 
 def fingerprint(df: DataFrame, text_col: str = "text",

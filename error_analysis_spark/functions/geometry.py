@@ -3,13 +3,14 @@
 The reference uses shapely/rasterio for these (stable_unstable_areas.py:
 598-638 rasterize, 288-306 vector read; variography_uncertainty.py:1015-1034
 prepared-geometry containment). Here geometry is data, not a C library:
-polygons travel as WKT strings in small broadcast DataFrames, and the
-predicates are vectorized numpy inside Arrow-batched pandas UDFs —
-even-odd ray casting (holes supported), shoelace area.
+polygons travel as WKT strings in small DataFrames, and the predicates
+are vectorized numpy kernels — even-odd ray casting (holes supported),
+shoelace area, Douglas–Peucker simplification.
 
 Scale note: zone tables are tiny (tens of polygons) while pixel tables are
-huge, so every spatial predicate here is a broadcast join + per-batch
-numpy kernel; nothing shuffles on geometry.
+huge, so geometry runs on the zone side only (the scanline rasterizer in
+operators/zones, the σ_A samplers in operators/uncertainty); the pixel
+side meets it through a (row, col) join.
 """
 
 from __future__ import annotations
@@ -17,11 +18,7 @@ from __future__ import annotations
 import re
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-_NUM = r"[-+]?\d*\.?\d+(?:[eE][-+]?\d+)?"
 _RING_RE = re.compile(r"\(([^()]+)\)")
 
 
@@ -126,47 +123,6 @@ def polygon_bounds(wkt: str) -> tuple[float, float, float, float]:
     allpts = np.vstack(rings)
     return (float(allpts[:, 0].min()), float(allpts[:, 1].min()),
             float(allpts[:, 0].max()), float(allpts[:, 1].max()))
-
-
-def point_in_polygon_udf(wkt: str):
-    """Build a pandas UDF (x, y) → bool for one fixed polygon.
-
-    The WKT is parsed once per executor (closure capture), then each Arrow
-    batch is tested with the vectorized kernel — the Spark-side analog of
-    the reference's `prep(geometry)` caching (variography_uncertainty.py:
-    1015, 1022).
-    """
-    rings = parse_wkt_polygon(wkt)  # parse eagerly: validates on the driver
-
-    @F.pandas_udf(T.BooleanType())
-    def _pip(x: pd.Series, y: pd.Series) -> pd.Series:
-        m = pip_mask(x.to_numpy(np.float64), y.to_numpy(np.float64), rings)
-        return pd.Series(m)
-
-    return _pip
-
-
-@F.pandas_udf(T.BooleanType())
-def point_in_wkt(x: pd.Series, y: pd.Series, wkt: pd.Series) -> pd.Series:
-    """Row-varying-polygon PIP for joined (point × zone) rows.
-
-    Used after a broadcast cross join of pixels × zones (J2). Parses each
-    distinct WKT once per batch (zones repeat heavily within a batch).
-    """
-    out = np.zeros(len(x), dtype=bool)
-    xs = x.to_numpy(np.float64)
-    ys = y.to_numpy(np.float64)
-    for w in wkt.dropna().unique():
-        rings = parse_wkt_polygon(w)
-        sel = (wkt == w).to_numpy()
-        out[sel] = pip_mask(xs[sel], ys[sel], rings)
-    return pd.Series(out)
-
-
-@F.pandas_udf(T.DoubleType())
-def wkt_area(wkt: pd.Series) -> pd.Series:
-    """Polygon area UDF (F9 min-area filter)."""
-    return wkt.map(lambda w: polygon_area(w) if isinstance(w, str) else np.nan)
 
 
 def simplify_ring(ring: np.ndarray, tol: float) -> np.ndarray:

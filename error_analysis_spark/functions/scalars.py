@@ -85,52 +85,9 @@ def spherical_gamma(h: Column, sills: list[float], ranges: list[float],
     return gamma
 
 
-def covariance_from_gamma(gamma: Column, sill_total: Column | float) -> Column:
-    """SC11a — C(h) = σ² − γ(h) (variography_uncertainty.py:1049-1055)."""
-    s = F.lit(float(sill_total)) if isinstance(sill_total, (int, float)) else sill_total
-    return s - gamma
-
-
-def correlation_from_gamma(gamma: Column, sill_total: Column | float) -> Column:
-    """SC11b — ρ(h) = 1 − γ(h)/σ², clipped to [−1, 1]
-    (variography_uncertainty.py:1359-1360, clip :1271-1272)."""
-    s = F.lit(float(sill_total)) if isinstance(sill_total, (int, float)) else sill_total
-    rho = F.lit(1.0) - gamma / s
-    return F.greatest(F.lit(-1.0), F.least(F.lit(1.0), rho))
-
-
 def dist2d(dx: Column, dy: Column) -> Column:
     """SC12 — Euclidean distance (variography_uncertainty.py:405-411)."""
     return F.sqrt(dx * dx + dy * dy)
-
-
-def pixel_to_coord_x(col_idx: Column, x0: Column | float, res: Column | float) -> Column:
-    """SC13 — pixel-center x = x0 + (col + 0.5)·res (rasterio `src.xy` semantics,
-    variography_uncertainty.py:214)."""
-    x0c = F.lit(float(x0)) if isinstance(x0, (int, float)) else x0
-    resc = F.lit(float(res)) if isinstance(res, (int, float)) else res
-    return x0c + (col_idx + F.lit(0.5)) * resc
-
-
-def pixel_to_coord_y(row_idx: Column, y0: Column | float, res: Column | float) -> Column:
-    """SC13 — pixel-center y = y0 − (row + 0.5)·res (north-up grid)."""
-    y0c = F.lit(float(y0)) if isinstance(y0, (int, float)) else y0
-    resc = F.lit(float(res)) if isinstance(res, (int, float)) else res
-    return y0c - (row_idx + F.lit(0.5)) * resc
-
-
-def coord_to_pixel_row(y: Column, y0: Column | float, res: Column | float) -> Column:
-    """SC13 inverse — row = floor((y0 − y)/res)."""
-    y0c = F.lit(float(y0)) if isinstance(y0, (int, float)) else y0
-    resc = F.lit(float(res)) if isinstance(res, (int, float)) else res
-    return F.floor((y0c - y) / resc).cast("int")
-
-
-def coord_to_pixel_col(x: Column, x0: Column | float, res: Column | float) -> Column:
-    """SC13 inverse — col = floor((x − x0)/res)."""
-    x0c = F.lit(float(x0)) if isinstance(x0, (int, float)) else x0
-    resc = F.lit(float(res)) if isinstance(res, (int, float)) else res
-    return F.floor((x - x0c) / resc).cast("int")
 
 
 def quadrature(*cols: Column) -> Column:

@@ -1,6 +1,7 @@
 """Grid alignment, differencing, and mask algebra — SURVEY.md §2
-R1 (regrid), J1 (pair join), J3/SO4 (footprint intersect), R4 (DoD),
-R5 (bias subtract), SO3 (combined mask), R9 (detailed area).
+R1 (regrid), J1 (pair join; its inner join is the J3/SO4 footprint
+intersect), R4 (DoD), R5 (bias subtract), SO3 (combined mask), R9
+(detailed area).
 
 Reference semantics: differencing_functions.py:149-191 (`_align`:
 reproject the LARGER raster onto the smaller grid), 2056-2116
@@ -150,14 +151,6 @@ def combined_mask(a: DataFrame, b: DataFrame) -> DataFrame:
     invalid = (F.col("va").isNull() | F.isnan(F.coalesce("va", F.lit(0.0)))
                | F.col("vb").isNull() | F.isnan(F.coalesce("vb", F.lit(0.0))))
     return j.select("row", "col", invalid.alias("invalid"))
-
-
-def footprint_intersection(a: DataFrame, b: DataFrame) -> DataFrame:
-    """SO4/J3 — overlap = valid(a) ∩ valid(b) as a key-set inner join
-    (differencing_functions.py:2024-2047 in pixel space)."""
-    ka = a.where(_valid()).select("row", "col")
-    kb = b.where(_valid()).select("row", "col")
-    return ka.join(kb, ["row", "col"], "inner")
 
 
 def valid_area(df: DataFrame, res: float, value: str = "value") -> DataFrame:

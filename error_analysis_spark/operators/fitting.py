@@ -9,11 +9,16 @@ sigma ∈ {std, linear, exp, sqrt, sq}; loglik :668-677, init :557-567),
 Spark-first design: the empirical variogram is tiny (≤ a few thousand
 bins), while the fit workload is a grid of independent optimizations —
 (config × init) for the search, (replicate) for the bootstrap, (fold)
-for CV. Each grid is a small DataFrame fanned out with `applyInPandas`;
-the variogram rides along in the closure (driver-broadcast). The
-optimizer is a self-contained numpy Levenberg–Marquardt (the container
-has no scipy) with pinned perturbed inits, mirroring the reference's
-seeded `curve_fit` restarts.
+for CV. Each grid is a small DataFrame run through `applyInPandas`; the
+variogram rides along in the closure (driver-broadcast). The grid is
+tiny, so AQE coalesces its shuffle: the 30-row model-search grid runs
+as ONE task on the executor, the fits one after another — it is not a
+parallel search. It stays in a Python worker because the worker's
+single-threaded LM solve is bit-identical across core counts, which a
+driver-side fit on multi-threaded BLAS is not. The optimizer is a
+self-contained numpy Levenberg–Marquardt (no scipy dependency)
+with pinned perturbed inits, mirroring the reference's seeded
+`curve_fit` restarts.
 """
 
 from __future__ import annotations
@@ -193,9 +198,10 @@ _FIT_SCHEMA = ("config_id int, init_id int, n_comp int, nugget boolean, "
 def fit_best_spherical_model(spark: SparkSession, vario_pdf: pd.DataFrame,
                              sigma_type: str = "std", n_inits: int = 5,
                              seed: int = 42) -> tuple[pd.DataFrame, dict]:
-    """U2 — distributed model search: 6 configs × n_inits optimizations via
-    `applyInPandas` over a tiny task grid; min-AIC row wins (ties to the
-    simpler model via (aic, config_id) ordering).
+    """U2 — model search: 6 configs × n_inits optimizations via one
+    `applyInPandas` over a tiny task grid, which AQE coalesces into one
+    task (the fits run sequentially in one Python worker); min-AIC row
+    wins (ties to the simpler model via (aic, config_id) ordering).
 
     `vario_pdf`: columns lag, gamma_mean, gamma_std (A5 output collected —
     ≤ a few KB). Returns (all fit rows, best fit dict).

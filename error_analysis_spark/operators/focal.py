@@ -2,23 +2,16 @@
 slope, aspect, hillshade, roughness (gdal.DEMProcessing semantics,
 differencing_functions.py:2288-2411).
 
-Two interchangeable physical strategies over the long pixel table:
+One relational operator over the long pixel table: `neighbors` gathers
+each pixel's 3×3 stencil with one explode + groupBy (each pixel ships
+its value to the 9 stencil positions it takes part in — one shuffle),
+and `derive_join_all` computes all four derivatives as column math over
+that gather. Pure relational, so the SQL oracle can check it.
 
-1. `neighbors` + column math — an 8-offset self equi-join on
-   (row±1, col±1). Pure relational: Catalyst plans one shuffle-join per
-   grid; fine for moderate rasters and the only form the SQL oracle can
-   check.
-2. `focal_tiles` — halo-exchange tiling with a per-tile numpy kernel in
-   `applyInPandas` (the scale path): each pixel is assigned to its own
-   tile plus (boundary pixels only) up to 3 neighbor tiles via a
-   generated tile list + explode, then one hash repartition groups each
-   tile WITH its 1-px halo, and the whole 3×3 stencil runs vectorized.
-   Shuffle volume ≈ N + perimeter overhead (<2% at 256² tiles) — vs. 8N
-   for the join form.
-
-Both produce identical values on interior pixels; edge pixels follow
-GDAL's edge-replication convention (kernel sees NaN outside; outputs
-NULL there, matching gdal's default edge nodata).
+Edge pixels follow GDAL's convention: the output is NULL wherever the
+stencil is incomplete (outside the raster or a nodata neighbor), and a
+nodata centre is NULL out. `derive_np` is the numpy reference of the
+same kernel that the tests compare against.
 """
 
 from __future__ import annotations
@@ -26,7 +19,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -34,7 +26,7 @@ DERIVATIVES = ("slope", "aspect", "hillshade", "roughness")
 
 
 # --------------------------------------------------------------------------
-# numpy kernels (shared by the tile path and the test oracle)
+# numpy reference kernel (the test oracle)
 # --------------------------------------------------------------------------
 
 def horn_gradients(z: np.ndarray, res: float) -> tuple[np.ndarray, np.ndarray]:
@@ -81,16 +73,16 @@ def derive_np(z: np.ndarray, res: float, which: str,
 
 
 # --------------------------------------------------------------------------
-# strategy 1: 8-offset neighbor join + column math
+# relational operator: stencil gather + column math
 # --------------------------------------------------------------------------
 
-def neighbors(pixels: DataFrame, center_marker: bool = False) -> DataFrame:
-    """Gather the 3×3 stencil as columns z_mm..z_pp via 9 aliased joins
-    expressed as one explode + pivot-free groupBy (each pixel ships its
-    value to the 9 stencil positions it participates in — one shuffle).
-    ``center_marker`` adds `_ctr` = 1 where a SOURCE ROW exists at the
-    group's own (row, col) — the value-independent way to tell real
-    centers (possibly nodata-valued) from phantom edge groups."""
+def neighbors(pixels: DataFrame) -> DataFrame:
+    """Gather the 3×3 stencil as columns z_00..z_22 via one explode +
+    pivot-free groupBy (each pixel ships its value to the 9 stencil
+    positions it participates in — one shuffle). `_ctr` = 1 where a
+    SOURCE ROW exists at the group's own (row, col) — the
+    value-independent way to tell real centers (possibly nodata-valued)
+    from phantom edge groups."""
     offsets = F.array(*[
         F.struct(F.lit(dy).alias("dy"), F.lit(dx).alias("dx"))
         for dy in (-1, 0, 1) for dx in (-1, 0, 1)
@@ -110,37 +102,31 @@ def neighbors(pixels: DataFrame, center_marker: bool = False) -> DataFrame:
                      F.col("value"))).alias(f"z_{dy + 1}{dx + 1}")
         for dy in (-1, 0, 1) for dx in (-1, 0, 1)
     ]
-    if center_marker:
-        agg.append(F.max(F.when((F.col("sy") == 0) & (F.col("sx") == 0),
-                                F.lit(1))).alias("_ctr"))
+    agg.append(F.max(F.when((F.col("sy") == 0) & (F.col("sx") == 0),
+                            F.lit(1))).alias("_ctr"))
     return contrib.groupBy("row", "col").agg(*agg)
 
 
-def _stencil_parts(pixels: DataFrame):
-    """Shared prep for the relational R2 forms: gathered stencil (center
-    ROWS only — a presence marker on the (0,0) contribution, not a
-    z_11 non-null test, so a nodata-valued source row still emits its
-    (row, col, NULL) output exactly like `derive_tiled` while phantom
-    (row±1, col±1) groups outside the raster are still dropped), the
-    z-offset column map, and the complete-window predicate (GDAL edge
-    convention; NaN neighbors count as nodata, matching the tiled
-    kernel's non-finite → NULL rule)."""
-    nb = neighbors(pixels, center_marker=True) \
-        .where(F.col("_ctr") == 1).drop("_ctr")
+def derive_join_all(pixels: DataFrame, res: float,
+                    azimuth: float = 315.0,
+                    altitude: float = 45.0) -> DataFrame:
+    """R2 — all four derivatives from ONE stencil gather (Horn's
+    gradients, as `horn_gradients`). Output: row, col, slope, aspect,
+    hillshade, roughness — exactly one row per source pixel, NULL where
+    the stencil is incomplete (GDAL edge convention; a NaN neighbor
+    counts as nodata)."""
+    # center ROWS only — a presence marker on the (0,0) contribution,
+    # not a z_11 non-null test, so a nodata-valued source row still
+    # emits its (row, col, NULL) output while phantom (row±1, col±1)
+    # groups outside the raster are dropped
+    nb = neighbors(pixels).where(F.col("_ctr") == 1).drop("_ctr")
     z = {(dy, dx): F.col(f"z_{dy + 1}{dx + 1}")
          for dy in (-1, 0, 1) for dx in (-1, 0, 1)}
     complete = None
     for c in z.values():
         cc = c.isNotNull() & ~F.isnan(c)
         complete = cc if complete is None else (complete & cc)
-    return nb, z, complete
 
-
-def _stencil_exprs(z: dict, res: float, azimuth: float,
-                   altitude: float) -> dict:
-    """All four Horn-stencil derivatives as column expressions over the
-    gathered 3×3 window — shared so the single-derivative and the
-    one-pass all-derivatives forms stay term-for-term identical."""
     dzdx = ((z[(-1, 1)] + 2 * z[(0, 1)] + z[(1, 1)])
             - (z[(-1, -1)] + 2 * z[(0, -1)] + z[(1, -1)])) / (8.0 * res)
     dzdy = ((z[(1, -1)] + 2 * z[(1, 0)] + z[(1, 1)])
@@ -156,7 +142,7 @@ def _stencil_exprs(z: dict, res: float, azimuth: float,
     shade = (F.lit(math.sin(alt)) * F.cos(slope_rad)
              + F.lit(math.cos(alt)) * F.sin(slope_rad)
              * F.cos(F.lit(az) - asp_rad))
-    return {
+    exprs = {
         "slope": F.degrees(slope_rad),
         "aspect": F.when((dzdx == 0) & (dzdy == 0), 0.0).otherwise(asp),
         "hillshade": (F.greatest(F.lit(0.0), F.least(F.lit(1.0), shade))
@@ -164,91 +150,6 @@ def _stencil_exprs(z: dict, res: float, azimuth: float,
         # GDAL semantics: window max − window min (center included)
         "roughness": F.greatest(*z.values()) - F.least(*z.values()),
     }
-
-
-def derive_join(pixels: DataFrame, res: float, which: str,
-                azimuth: float = 315.0, altitude: float = 45.0) -> DataFrame:
-    """R2 via the relational stencil. Output: row, col, value (NULL where
-    the stencil is incomplete — GDAL edge convention)."""
-    nb, z, complete = _stencil_parts(pixels)
-    exprs = _stencil_exprs(z, res, azimuth, altitude)
-    if which not in exprs:
-        raise ValueError(f"unknown derivative: {which}")
-    return nb.select("row", "col",
-                     F.when(complete, exprs[which]).alias("value"))
-
-
-def derive_join_all(pixels: DataFrame, res: float,
-                    azimuth: float = 315.0,
-                    altitude: float = 45.0) -> DataFrame:
-    """All four R2 derivatives from ONE stencil gather — the shuffle that
-    dominates the relational form is paid once instead of four times.
-    Output: row, col, slope, aspect, hillshade, roughness."""
-    nb, z, complete = _stencil_parts(pixels)
-    exprs = _stencil_exprs(z, res, azimuth, altitude)
     return nb.select("row", "col",
                      *[F.when(complete, e).alias(k)
                        for k, e in exprs.items()])
-
-
-# --------------------------------------------------------------------------
-# strategy 2: halo-exchange tiles + numpy kernel (scale path)
-# --------------------------------------------------------------------------
-
-def derive_tiled(pixels: DataFrame, res: float, which: str, tile: int = 256,
-                 azimuth: float = 315.0, altitude: float = 45.0) -> DataFrame:
-    """R2 via halo tiling: pixels replicate to adjacent tiles when they
-    sit on a tile boundary ring, then each tile computes the full stencil
-    vectorized in one pandas batch."""
-    t = F.lit(tile)
-    # home tile + halo copies: a pixel at a tile edge also belongs to the
-    # neighboring tile's halo. Enumerate the (ty, tx) tiles whose halo
-    # window [ty*tile-1, (ty+1)*tile] contains the pixel. floor division
-    # (not int cast, which truncates toward zero) keeps negative
-    # coordinates on the correct tile.
-    tiles = F.array_distinct(F.array(*[
-        F.struct(F.floor((F.col("row") + dy) / t).cast("int").alias("ty"),
-                 F.floor((F.col("col") + dx) / t).cast("int").alias("tx"))
-        for dy in (-1, 0, 1) for dx in (-1, 0, 1)
-    ]))
-    fanned = (
-        pixels.select("row", "col", "value")
-        .withColumn("t", F.explode(tiles))
-        .select(F.col("t.ty").alias("ty"), F.col("t.tx").alias("tx"),
-                "row", "col", "value")
-    )
-
-    def kernel(key, pdf):
-        ty, tx = int(key[0]), int(key[1])
-        r0, c0 = ty * tile, tx * tile
-        z = np.full((tile + 2, tile + 2), np.nan)
-        rows_np = pdf["row"].to_numpy()
-        cols_np = pdf["col"].to_numpy()
-        rr = rows_np - r0 + 1
-        cc = cols_np - c0 + 1
-        keep = (rr >= 0) & (rr < tile + 2) & (cc >= 0) & (cc < tile + 2)
-        z[rr[keep], cc[keep]] = pdf["value"].to_numpy()[keep]
-        out = derive_np(z, res, which, azimuth, altitude)
-        # emit one row per SOURCE pixel in this tile's interior — NULL
-        # where the stencil is incomplete (parity with derive_join)
-        own = (rows_np // tile == ty) & (cols_np // tile == tx)
-        orr = rows_np[own] - r0
-        occ = cols_np[own] - c0
-        vals = out[orr, occ]
-        # GDAL convention (and derive_join parity): a nodata CENTER is
-        # nodata out, even for stencils like Horn slope that don't read
-        # the center cell
-        vals = np.where(np.isfinite(z[orr + 1, occ + 1]), vals, np.nan)
-        # incomplete-stencil cells must surface as SQL NULL (exact parity
-        # with derive_join's F.when) — NaN in a float64 column stays NaN
-        # through Arrow, and NaN != NULL to every downstream isNotNull()
-        vals_obj = vals.astype(object)
-        vals_obj[~np.isfinite(vals)] = None
-        return pd.DataFrame({
-            "row": rows_np[own], "col": cols_np[own], "value": vals_obj,
-        })
-
-    # halo-only copies never emit (they fall outside `own`), so the
-    # output is exactly one row per source pixel — no dedup, no join
-    return (fanned.groupBy("ty", "tx")
-            .applyInPandas(kernel, "row int, col int, value double"))

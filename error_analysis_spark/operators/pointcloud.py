@@ -585,9 +585,8 @@ def classify_ground_smrf(points: DataFrame, grid: GridSpec,
     Tiles carry a `2·window·cell` halo so openings at tile edges see
     the same neighborhood they would in a monolithic array — each of
     the `window` erode(1)+dilate(1) iterations has Chebyshev dependence
-    radius 2, so the loop's total reach is 2·window cells (the same
-    halo-exchange trick as operators/focal.py, sized to the iterated
-    kernel, not one pass).
+    radius 2, so the loop's total reach is 2·window cells (halo
+    exchange sized to the iterated kernel, not one pass).
     Output: the input rows with a `classification` column rewritten.
     """
     import numpy as np
@@ -629,8 +628,8 @@ def classify_ground_smrf(points: DataFrame, grid: GridSpec,
             # opening every pass is idempotent on plateaus wider than
             # 2 cells, so wide roofs would never be removed. Max reach
             # of the final iteration = 2·window cells = the tile halo.
-            eroded = _grey_erode(surf, r)
-            opened = _grey_dilate(eroded, r)
+            eroded = _square_extreme(surf, r, np.min, np.inf)
+            opened = _square_extreme(eroded, r, np.max, -np.inf)
             bump = surf - opened > slope * r * cell
             surf = np.where(bump, opened, surf)
         # label: inside the tile's own (non-halo) extent only
@@ -651,48 +650,19 @@ def classify_ground_smrf(points: DataFrame, grid: GridSpec,
     return fanned.groupBy("ty", "tx").applyInPandas(kernel, schema)
 
 
-def _shift(a, dy, dx, fill):
-    """out[y, x] = a[y-dy, x-dx], `fill` outside — np.roll's shift
-    WITHOUT its toroidal wrap (wrap would leak the opposite edge's
-    elevations into tile halos and contaminate seam cells)."""
-    import numpy as np
-    out = np.full_like(a, fill)
-    h, w = a.shape
-    ys0, ys1 = max(dy, 0), h + min(dy, 0)
-    xs0, xs1 = max(dx, 0), w + min(dx, 0)
-    if ys0 < ys1 and xs0 < xs1:
-        out[ys0:ys1, xs0:xs1] = a[ys0 - dy:ys1 - dy, xs0 - dx:xs1 - dx]
-    return out
-
-
-def _grey_erode(a, r):
-    """Min filter with square (Chebyshev) radius r (pure numpy — no
-    scipy). The radius-r square element decomposes into r radius-1
-    passes (9r shifts instead of (2r+1)² — same result, the SE is
-    separable under iteration). Border neighbors outside the array are
-    +inf (the min-identity), so edges erode over their AVAILABLE
-    neighborhood only."""
-    import numpy as np
-    out = a
-    for _ in range(r):
-        step = out.copy()
-        for dy in (-1, 0, 1):
-            for dx in (-1, 0, 1):
-                step = np.minimum(step, _shift(out, dy, dx, np.inf))
-        out = step
-    return out
-
-
-def _grey_dilate(a, r):
-    import numpy as np
-    out = a
-    for _ in range(r):
-        step = out.copy()
-        for dy in (-1, 0, 1):
-            for dx in (-1, 0, 1):
-                step = np.maximum(step, _shift(out, dy, dx, -np.inf))
-        out = step
-    return out
+def _square_extreme(a, r, reduce, fill):
+    """Grey erosion (`reduce=np.min`, `fill=+inf`) or dilation
+    (`np.max`, `-inf`) with the square (Chebyshev) radius-r element —
+    pure numpy, no scipy. The square element is separable: one
+    (2r+1)-long sliding-window reduce down the rows, then one across the
+    columns. The array is padded with `fill` (the reduce's identity), so
+    edge cells reduce over their AVAILABLE neighborhood only and no
+    opposite-edge value wraps into a tile halo."""
+    from numpy.lib.stride_tricks import sliding_window_view
+    k = 2 * r + 1
+    p = np.pad(a, r, constant_values=fill)
+    p = reduce(sliding_window_view(p, k, axis=0), axis=-1)
+    return reduce(sliding_window_view(p, k, axis=1), axis=-1)
 
 
 def dem_pipeline(points: DataFrame, grid: GridSpec, kind: str = "dtm",

@@ -8,14 +8,16 @@ quadrature totals (variography_uncertainty.py:989-1582).
 
 The five correlated-term estimators form the reference's own
 accuracy/cost ladder (:989-1001): brute O(N²) validates analytical
-O(steps), MC O(n_pairs), FFT O(n log n), Hugonnet O(kN). We keep all
-five as user-selectable methods and, like the reference, use
-cross-method agreement as the correctness oracle (SURVEY §5.1).
+O(steps), MC O(n_pairs), FFT O(n log n), Hugonnet O(kN). All five are
+kept and, like the reference, cross-method agreement is the
+correctness oracle (SURVEY §5.1). The ladder's per-zone dispatch is
+written once, in `sigma_a_by_zone`.
 
-Scale shapes: MC is a bounded numpy kernel per polygon, run
-zone-parallel by `sigma_a_by_zone`; Hugonnet broadcasts k centers
-against the pixel table (map-side cross join + two-level agg); brute
-force stays a bounded validation path (grid_points caps N).
+Scale shapes: MC, FFT and analytical are bounded numpy kernels per
+polygon, run for a whole zone table by `sigma_a_by_zone`; Hugonnet
+broadcasts k centers against the pixel table (map-side cross join +
+two-level agg); brute force stays a bounded validation path
+(grid_points caps N).
 """
 
 from __future__ import annotations
@@ -174,8 +176,7 @@ def estimate_monte_carlo(wkt: str, sills, ranges, nugget=0.0,
     numpy kernel. The two point sets are the streams
     `uniform_points_in_polygon` draws for `seed` and `seed + 1` (shared
     `_sample_part`), paired by index. Bounded per zone, so
-    `sigma_a_by_zone` runs it zone-parallel (many zones × 25k pairs
-    each: one job wave, not one cluster job per zone)."""
+    `sigma_a_by_zone` runs it for every zone inside one Spark job."""
     rings = parse_wkt_polygon(wkt)
     bounds = polygon_bounds(wkt)
     xa, ya, xb, yb = [], [], [], []
@@ -355,21 +356,25 @@ def estimate_fft(wkt: str, sills, ranges, nugget=0.0,
 
 def sigma_a_by_zone(zones: DataFrame, sills, ranges, nugget=0.0,
                     method: str = "fft", **kw) -> DataFrame:
-    """Distributed per-zone σ_A: one `applyInPandas` task per zone runs
-    the bounded numpy kernel (fft / analytical / monte_carlo) — the
-    many-polygons scale path (a landslide inventory has thousands of
-    zones; each kernel is bounded by grid_points²/num_steps/n_pairs, so
-    zone-parallelism is the right axis — N zones = one job wave, not N
-    sequential cluster jobs).
+    """Per-zone σ_A for a zone table: one `applyInPandas` grouped by
+    zone_id runs the bounded numpy kernel (fft / analytical /
+    monte_carlo) for each zone — the reference's method ladder
+    (variography_uncertainty.py:989-1001) for the kernels whose cost is
+    bounded by grid_points² / num_steps / n_pairs. It is one Spark job
+    for all zones, not one job per zone. How many tasks share the zones
+    is AQE's choice: the zone table is tiny, so AQE coalesces the
+    shuffle to one partition, and on a `local[3]` session 60 zones ran
+    as ONE task, kernel after kernel.
 
-    Brute-force stays whole-cluster per zone (it is itself distributed)
-    — use `estimate_sigma_a` in a loop for it. Output: zone_id, sigma_a.
+    Brute force takes a different input (one WKT, its own cross-join
+    plan): call `estimate_brute_force` per zone, or
+    `brute_force_rect_by_zone` for rectangles. Output: zone_id, sigma_a.
     """
     import pandas as pd
 
     if method not in ("fft", "analytical", "monte_carlo"):
         raise ValueError(
-            f"sigma_a_by_zone parallelizes bounded per-zone kernels only "
+            f"sigma_a_by_zone runs bounded per-zone kernels only "
             f"(fft, analytical, monte_carlo), got: {method}")
     s, r, n = list(sills), list(ranges), float(nugget)
     gp = kw.get("grid_points", 200)
@@ -392,25 +397,3 @@ def sigma_a_by_zone(zones: DataFrame, sills, ranges, nugget=0.0,
     return (zones.select("zone_id", "wkt")
             .groupBy("zone_id")
             .applyInPandas(one, "zone_id string, sigma_a double"))
-
-
-# --------------------------------------------------------------------------
-# dispatch (mirrors the reference's method= ladder, :989-1001)
-# --------------------------------------------------------------------------
-
-def estimate_sigma_a(spark: SparkSession, wkt: str, sills, ranges, nugget=0.0,
-                     method: str = "analytical", **kw) -> float:
-    if method == "analytical":
-        return estimate_analytical(polygon_area(wkt), sills, ranges, nugget,
-                                   kw.get("num_steps", 1000))
-    if method == "monte_carlo":
-        return estimate_monte_carlo(wkt, sills, ranges, nugget,
-                                    kw.get("n_pairs", 100_000),
-                                    kw.get("seed", 42))
-    if method == "brute_force":
-        return estimate_brute_force(spark, wkt, sills, ranges, nugget,
-                                    kw.get("grid_points", 100))
-    if method == "fft":
-        return estimate_fft(wkt, sills, ranges, nugget,
-                            kw.get("grid_points", 200))
-    raise ValueError(f"unknown method: {method}")

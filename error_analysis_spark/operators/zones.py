@@ -1,16 +1,17 @@
-"""Zone delineation and membership — SURVEY.md §2 J2 (point-in-polygon
-semi-join), R8 (rasterize), SO2 (stable = valid − unstable), A13 (counts).
+"""Zone delineation and membership — SURVEY.md §2 J2 (zone × pixel
+membership), R8 (rasterize), SO2 (stable = valid − unstable), A13
+(counts).
 
 Reference semantics: stable_unstable_areas.py:598-638 (rasterize zones
 into masks), 351-410 (derive_stable_from_unstable), 445-454 (pixel
 counting), 641-671 (stats_all/stats_each).
 
-Spark-first design: zones are a tiny broadcast table of WKT polygons;
-membership is a broadcast nested-loop join with a vectorized
-ray-casting pandas UDF on the pixel coordinates — the huge side never
-shuffles. Materializing the result (R8) gives the `zone_membership`
-table every downstream zonal aggregate joins against on (row, col).
-Bounding-box pre-filter keeps the UDF off pixels that cannot match.
+Spark-first design: zones are a tiny table of WKT polygons. They are
+scanline-rasterized onto the pixel grid (`rasterize_membership`, one
+task per (zone, tile)), and membership is a plain (row, col) equi-join
+against that table — no geometry work on the big pixel side. The
+result (R8) is the `zone_membership` table every downstream zonal
+aggregate joins against on (row, col).
 """
 
 from __future__ import annotations
@@ -18,51 +19,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from error_analysis_spark.functions.geometry import point_in_wkt, polygon_bounds
+
+def membership(pixels: DataFrame, zones: DataFrame, grid) -> DataFrame:
+    """J2/R8 — (pixel × zone) membership: `pixels` joined on (row, col)
+    with the zones burned onto `grid` (`rasterize_membership`).
+
+    `zones`: zone_id, kind, name, wkt. Precondition: each pixel's x/y
+    is the centre of its (row, col) cell on `grid` — a cell belongs to
+    a zone iff its centre is inside (even-odd, half-open edges), so the
+    join tests exactly the pixel coordinates. Output: the pixel columns
+    plus zone_id, kind (one row per pixel per containing zone)."""
+    return pixels.join(rasterize_membership(zones, grid), ["row", "col"])
 
 
-def membership(pixels: DataFrame, zones: DataFrame,
-               kinds: list[str] | None = None) -> DataFrame:
-    """J2/R8 — (pixel × zone) membership via broadcast PIP join.
-
-    `zones`: zone_id, kind, name, wkt. Adds a WKT bbox pre-filter as join
-    condition so the cross join is range-pruned before the UDF runs
-    (Catalyst evaluates the cheap bbox predicate first; the pandas UDF
-    sees only candidate rows).
-    """
-    if kinds is not None:
-        zones = zones.where(F.col("kind").isin(kinds))
-    zrows = zones.select("zone_id", "kind", "wkt").collect()
-    sess = pixels.sparkSession
-    bounds = [
-        (r["zone_id"], r["kind"], r["wkt"], *polygon_bounds(r["wkt"]))
-        for r in zrows
-    ]
-    # explicit schema: an EMPTY zone set (e.g. derive_stable on a zones
-    # table with no 'unstable' rows) must yield an empty membership, not
-    # a CANNOT_INFER_EMPTY_SCHEMA crash
-    zdf = sess.createDataFrame(
-        bounds, "zone_id string, kind string, wkt string, "
-                "minx double, miny double, maxx double, maxy double")
-    cand = pixels.join(
-        F.broadcast(zdf),
-        (F.col("x") >= F.col("minx")) & (F.col("x") <= F.col("maxx"))
-        & (F.col("y") >= F.col("miny")) & (F.col("y") <= F.col("maxy")),
-    )
-    return (
-        cand.where(point_in_wkt(F.col("x"), F.col("y"), F.col("wkt")))
-        .drop("wkt", "minx", "miny", "maxx", "maxy")
-    )
-
-
-def derive_stable(valid_pixels: DataFrame, zones: DataFrame) -> DataFrame:
+def derive_stable(valid_pixels: DataFrame, member: DataFrame) -> DataFrame:
     """SO2 — stable area = valid pixels minus the union of unstable
-    (feature-of-interest) polygons: anti-join on the membership keys
-    (derive_stable_from_unstable, stable_unstable_areas.py:351-410).
+    (feature-of-interest) zones: anti-join on the (row, col) keys of the
+    `kind = 'unstable'` rows of `member` (the `membership` frame;
+    derive_stable_from_unstable, stable_unstable_areas.py:351-410).
     Output: the stable subset of `valid_pixels` tagged zone_id='stable'.
     """
-    foi = membership(valid_pixels.select("row", "col", "x", "y"),
-                     zones, kinds=["unstable"]).select("row", "col")
+    foi = (member.where(F.col("kind") == "unstable")
+           .select("row", "col").distinct())
     return (
         valid_pixels.join(foi, ["row", "col"], "left_anti")
         .withColumn("zone_id", F.lit("stable"))
@@ -75,7 +53,7 @@ def zone_pixel_counts(member: DataFrame) -> DataFrame:
             .groupBy("zone_id").agg(F.count("*").alias("n_pixels")))
 
 
-def rasterize_membership(spark, zones: DataFrame, grid,
+def rasterize_membership(zones: DataFrame, grid,
                          tile: int = 256) -> DataFrame:
     """R8 — burn zones into the grid by SCANLINE fill, distributed over
     (zone × intersecting tile) tasks.
@@ -83,10 +61,10 @@ def rasterize_membership(spark, zones: DataFrame, grid,
     Per-pixel ray casting costs O(V) per cell; a scanline pass costs
     O(V·rows + cells) per tile — the classic rasterizer
     (stable_unstable_areas.py:598-638 delegates to rasterio's C version
-    of exactly this). Semantics match `membership`'s even-odd pip_mask
-    bit-for-bit: a cell belongs iff its CENTER is inside under the same
-    half-open crossing convention, so the two strategies are
-    interchangeable (asserted in tests). Output: row, col, zone_id, kind.
+    of exactly this). Semantics match `geometry.pip_mask` on the cell
+    centres bit-for-bit: a cell belongs iff its CENTER is inside under
+    the same even-odd, half-open crossing convention (asserted in
+    tests). Output: row, col, zone_id, kind.
 
     Scale shape: tasks are (zone, tile) pairs — output per task is
     bounded by tile², huge zones parallelize across their tiles, and the
@@ -99,6 +77,7 @@ def rasterize_membership(spark, zones: DataFrame, grid,
         parse_wkt_polygon, polygon_bounds,
     )
 
+    spark = zones.sparkSession
     x0, y0, res = float(grid.x0), float(grid.y0), float(grid.res)
     H, W_ = int(grid.height), int(grid.width)
     tasks = []
@@ -173,7 +152,7 @@ def rasterize_membership(spark, zones: DataFrame, grid,
             # row direction, the float range formula only SEEDS the
             # span; the exact pip comparison below is the sole filter,
             # so an edge crossing within a ULP of a cell center can
-            # never flip a cell against membership()'s verdict
+            # never flip a cell against pip_mask's verdict
             col_a = np.maximum(
                 np.ceil((ca - x0) / res - 0.5).astype(np.int64) - 1, cl)
             col_b = np.minimum(
@@ -189,7 +168,7 @@ def rasterize_membership(spark, zones: DataFrame, grid,
                 np.repeat(np.cumsum(n_cols) - n_cols, n_cols))
             out_rows = np.repeat(rr, n_cols)
             # exact predicate: crossing-parity against the cell CENTER,
-            # the same strict `<` the pip UDF uses
+            # the same strict `<` pip_mask uses
             cxc = x0 + (cols + 0.5) * res
             good2 = (np.repeat(ca, n_cols) < cxc) != \
                     (np.repeat(cb, n_cols) < cxc)

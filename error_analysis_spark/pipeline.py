@@ -6,12 +6,12 @@ composable API. A reference user's workflow maps 1:1:
     ---------                               -----------
     RasterPairProcessor.process          →  step 1 (align_pair)
     TopoDifferencer.save_difference_…    →  step 2 (difference)
-    TopoMapInteractor zones + derive     →  step 3 (membership/derive_stable)
+    TopoMapInteractor zones + derive     →  step 3 (membership, derive_stable)
     stats_all / stats_each               →  step 4 (zonal_stats)
     median bias + bootstrap + subtract   →  step 5
     calculate_mean_variogram_numba       →  step 6 (empirical_variogram)
     fit_best_spherical_model             →  step 7
-    RegionalUncertaintyEstimator         →  step 8 (estimate_sigma_a)
+    RegionalUncertaintyEstimator         →  step 8 (sigma_a_by_zone, MC)
 
 Everything before `.collect()` stays one lazy DataFrame DAG; the only
 materializations are the tiny model-facing tables (variogram bins, fit
@@ -57,7 +57,6 @@ def analyze_pair(reference: DataFrame, compare: DataFrame,
                  ref_grid: GridSpec, cmp_grid: GridSpec,
                  zones: DataFrame,
                  vario: VariogramParams | None = None,
-                 sigma_method: str = "monte_carlo",
                  seed: int = 42) -> PairAnalysis:
     """Run the full differencing → uncertainty chain on a raster pair.
 
@@ -72,17 +71,11 @@ def analyze_pair(reference: DataFrame, compare: DataFrame,
     dodv = dod.select("row", "col", "x", "y", F.col("dz").alias("value"))
 
     # 3: zone membership + stable derivation (J2/R8/SO2) — zones are
-    # scanline-rasterized onto the common grid (O(V·rows + cells) per
-    # tile vs O(V) ray casts per PIXEL), then membership is a plain
-    # (row, col) join with zero geometry work on the big side
-    common = ref_grid if (ref_grid.width * ref_grid.height
-                          <= cmp_grid.width * cmp_grid.height) else cmp_grid
-    burned = ZN.rasterize_membership(reference.sparkSession, zones, common)
-    member = dodv.join(burned, ["row", "col"]).cache()
-    foi = (member.where(F.col("kind") == "unstable")
-           .select("row", "col").distinct())
-    stable = (dodv.join(foi, ["row", "col"], "left_anti")
-              .withColumn("zone_id", F.lit("stable")).cache())
+    # scanline-rasterized onto the common grid, then membership is a
+    # plain (row, col) join with zero geometry work on the big side
+    common = AL.dst_grid(ref_grid, cmp_grid)
+    member = ZN.membership(dodv, zones, common).cache()
+    stable = ZN.derive_stable(dodv, member).cache()
 
     # 5: vertical bias (A6) + bootstrap uncertainty (A7) + subtract (R5)
     bias = ST.median_bias(stable).first()["bias"]
@@ -118,7 +111,8 @@ def analyze_pair(reference: DataFrame, compare: DataFrame,
         reference.sparkSession, vg_pdf.dropna(subset=["gamma_mean"]),
         seed=seed)
 
-    # 8: σ_A per unstable zone (J5/A9 by default; method selectable)
+    # 8: σ_A per unstable zone (J5/A9 Monte Carlo, one applyInPandas
+    # job over all zones)
     import numpy as np
     # params layout: [C1..Cn, a1..an, nugget?] (fitting._initial_params)
     params = np.asarray(best["params"], dtype=float)
@@ -126,20 +120,10 @@ def analyze_pair(reference: DataFrame, compare: DataFrame,
     sills = [float(v) for v in params[:n_comp]]
     ranges = [float(v) for v in params[n_comp:2 * n_comp]]
     nugget = float(params[-1]) if bool(best["nugget"]) else 0.0
-    unstable = zones.where(F.col("kind") == "unstable")
-    if sigma_method in ("fft", "analytical", "monte_carlo"):
-        # one applyInPandas job wave covers ALL zones (bounded numpy
-        # kernel per zone) — 500 zones ≠ 500 sequential cluster jobs
-        out = UN.sigma_a_by_zone(unstable, sills, ranges, nugget,
-                                 method=sigma_method, seed=seed)
-        sigma_a = {r["zone_id"]: r["sigma_a"] for r in out.collect()}
-    else:
-        # brute_force: itself a distributed crossJoin — loop stays
-        sigma_a = {}
-        for z in unstable.collect():
-            sigma_a[z["zone_id"]] = UN.estimate_sigma_a(
-                reference.sparkSession, z["wkt"], sills, ranges, nugget,
-                method=sigma_method, seed=seed)
+    out = UN.sigma_a_by_zone(zones.where(F.col("kind") == "unstable"),
+                             sills, ranges, nugget, method="monte_carlo",
+                             seed=seed)
+    sigma_a = {r["zone_id"]: r["sigma_a"] for r in out.collect()}
 
     return PairAnalysis(dod=corrected, bias=float(bias),
                         bias_std=float(bias_std), rms=float(rms),

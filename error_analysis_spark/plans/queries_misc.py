@@ -430,14 +430,16 @@ FROM events WHERE event_id % 20 = 2
 
 
 # --------------------------------------------------------------------------
-# A13 — valid-pixel counts per zone through the REAL broadcast-PIP
-# membership join (J2/R8/U6): two rectangles + one diamond, geometry
-# chosen so no pixel center lies on a polygon edge (pixel centers sit at
-# half-integers; rect corners are integers, the diamond radius is 15.5 so
-# |dx|+|dy| — always an integer for half-integer centers — never ties).
+# A13 — valid-pixel counts per zone through the REAL zone membership
+# (J2/R8/U6: scanline rasterization onto the 100×100 grid + (row, col)
+# join): two rectangles + one diamond, geometry chosen so no pixel
+# center lies on a polygon edge (pixel centers sit at half-integers;
+# rect corners are integers, the diamond radius is 15.5 so |dx|+|dy| —
+# always an integer for half-integer centers — never ties).
 # --------------------------------------------------------------------------
 
 def a13_zone_pixel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from error_analysis_spark.fixtures import GridSpec
     from error_analysis_spark.operators import zones as ZN
     ev = load_table(spark, sf_dir, "events")
     px = ev.where(F.col("event_id") < 10000).select(
@@ -455,7 +457,8 @@ def a13_zone_pixel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
          ("z_diamond", "unstable", "d",
           "POLYGON ((34.5 70, 50 85.5, 65.5 70, 50 54.5, 34.5 70))")],
         ["zone_id", "kind", "name", "wkt"])
-    member = ZN.membership(px, zones)
+    member = ZN.membership(px, zones,
+                           GridSpec("a13", 100, 100, 0.0, 100.0, 1.0))
     return ZN.zone_pixel_counts(member).orderBy("zone_id")
 
 

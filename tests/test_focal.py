@@ -1,9 +1,9 @@
 """Focal derivative (R2) tests — SURVEY §2.8, differencing_functions.py:2288-2411.
 
-Oracle: the shared numpy Horn kernel applied to the dense fixture array.
-Both physical strategies (8-offset stencil join; halo-tile applyInPandas)
-must agree with it and with each other, including at nodata holes and
-grid edges (GDAL edge convention: NULL where the stencil is incomplete).
+Oracle: the numpy Horn kernel (`derive_np`) applied to the dense fixture
+array. The relational stencil operator (`derive_join_all`) must agree
+with it, including at nodata holes and grid edges (GDAL edge
+convention: NULL where the stencil is incomplete).
 """
 
 from __future__ import annotations
@@ -49,7 +49,8 @@ def _oracle(grid, res, which):
 @pytest.mark.parametrize("which", FO.DERIVATIVES)
 def test_join_strategy_matches_numpy(pixels, grid, which):
     res = 2.0
-    got = FO.derive_join(pixels, res, which).toPandas()
+    got = FO.derive_join_all(pixels, res) \
+        .select("row", "col", F.col(which).alias("value")).toPandas()
     want = _oracle(grid, res, which)
     n = grid.shape[0]
     arr = np.full((n, n), np.nan)
@@ -63,42 +64,28 @@ def test_join_strategy_matches_numpy(pixels, grid, which):
     assert not np.any(np.isfinite(arr) & ~np.isfinite(want))
 
 
-@pytest.mark.parametrize("which", ["slope", "roughness"])
-def test_tiled_strategy_matches_join(pixels, which):
-    """Both strategies emit IDENTICAL row sets: one row per source
-    pixel, NULL where the stencil is incomplete."""
-    res = 2.0
-    a = FO.derive_join(pixels, res, which).toPandas()
-    b = FO.derive_tiled(pixels, res, which, tile=32).toPandas()
-    a = a.sort_values(["row", "col"]).reset_index(drop=True)
-    b = b.sort_values(["row", "col"]).reset_index(drop=True)
-    assert len(a) == len(b) == pixels.count()
-    np.testing.assert_array_equal(a["row"], b["row"])
-    an, bn = a["value"].isna(), b["value"].isna()
-    np.testing.assert_array_equal(an.to_numpy(), bn.to_numpy())
-    np.testing.assert_allclose(a["value"][~an], b["value"][~bn],
-                               rtol=1e-9, atol=1e-9)
-
-
 def test_strategies_handle_negative_rows(spark):
     """Pixels at negative grid indices (points above/left of the grid
-    origin) flow through both strategies identically."""
+    origin) get exactly one output row each, equal to the numpy kernel
+    on the dense array (NULL on the incomplete edge ring)."""
     n = 10
     rr, cc = np.mgrid[-3:n, -2:n]
+    z = (rr * 0.5 + cc * 0.25).astype(np.float64)
     pdf = pd.DataFrame({
         "row": rr.ravel().astype(np.int32),
         "col": cc.ravel().astype(np.int32),
-        "value": (rr.ravel() * 0.5 + cc.ravel() * 0.25).astype(np.float64),
+        "value": z.ravel(),
     })
     px = spark.createDataFrame(pdf)
-    a = FO.derive_join(px, 1.0, "slope").toPandas() \
-        .sort_values(["row", "col"]).reset_index(drop=True)
-    b = FO.derive_tiled(px, 1.0, "slope", tile=4).toPandas() \
-        .sort_values(["row", "col"]).reset_index(drop=True)
-    assert len(a) == len(b) == len(pdf)
-    an, bn = a["value"].isna(), b["value"].isna()
-    np.testing.assert_array_equal(an.to_numpy(), bn.to_numpy())
-    np.testing.assert_allclose(a["value"][~an], b["value"][~bn], rtol=1e-9)
+    got = FO.derive_join_all(px, 1.0).select("row", "col", "slope") \
+        .toPandas().sort_values(["row", "col"]).reset_index(drop=True)
+    assert list(zip(got["row"], got["col"])) == \
+        list(zip(pdf["row"], pdf["col"]))
+    want = FO.derive_np(np.pad(z, 1, constant_values=np.nan), 1.0,
+                        "slope").ravel()
+    gn = got["slope"].isna().to_numpy()
+    np.testing.assert_array_equal(gn, ~np.isfinite(want))
+    np.testing.assert_allclose(got["slope"][~gn], want[~gn], rtol=1e-9)
 
 
 def test_flat_plane_derivatives(spark):
@@ -113,26 +100,11 @@ def test_flat_plane_derivatives(spark):
         "value": (3.0 * cc.ravel()).astype(np.float64),
     })
     px = spark.createDataFrame(pdf)
-    out = (FO.derive_join(px, res, "slope").where(F.col("value").isNotNull())
-           .agg(F.min("value"), F.max("value")).collect()[0])
+    der = FO.derive_join_all(px, res)
+    out = (der.where(F.col("slope").isNotNull())
+           .agg(F.min("slope"), F.max("slope")).collect()[0])
     expect = np.degrees(np.arctan(3.0))
     assert abs(out[0] - expect) < 1e-9 and abs(out[1] - expect) < 1e-9
-    asp = (FO.derive_join(px, res, "aspect").where(F.col("value").isNotNull())
-           .agg(F.min("value"), F.max("value")).collect()[0])
+    asp = (der.where(F.col("aspect").isNotNull())
+           .agg(F.min("aspect"), F.max("aspect")).collect()[0])
     assert abs(asp[0] - 270.0) < 1e-9 and abs(asp[1] - 270.0) < 1e-9
-
-
-def test_derive_join_all_matches_singles(pixels):
-    """The one-gather all-derivatives form is column-for-column
-    identical to the four single-derivative stencil joins (shared
-    expression builder, so this pins the consolidation refactor)."""
-    res = 2.0
-    allp = FO.derive_join_all(pixels, res).toPandas() \
-        .set_index(["row", "col"]).sort_index()
-    for which in FO.DERIVATIVES:
-        one = FO.derive_join(pixels, res, which).toPandas() \
-            .set_index(["row", "col"]).sort_index()["value"]
-        a = allp[which]
-        both = a.notna() & one.notna()
-        assert (a.isna() == one.isna()).all()
-        assert np.allclose(a[both], one[both], rtol=0, atol=0)

@@ -522,9 +522,9 @@ def test_registry_wide_plan_invariants(spark):
        10-100× slow path.
     3. Arrow-batched Python (ArrowEvalPython / FlatMapGroupsInPandas /
        MapInPandas) appears ONLY in the documented kernels: pandas
-       UDFs for CRS/PIP (SURVEY §7 design), applyInPandas for the
-       σ_A / blocked-GEMM / k-means numpy kernels, mapInPandas for
-       multimodal decode.
+       UDFs for CRS (SURVEY §7 design), applyInPandas for the zone
+       scanline rasterizer and the σ_A / blocked-GEMM / k-means numpy
+       kernels, mapInPandas for multimodal decode.
 
     Swept at the sf0.001 sibling of SF_DIR so eager sub-steps
     (localCheckpoint count tables, driver-side zone lists) stay

@@ -240,6 +240,24 @@ def test_noise_filter(points, cloud):
     assert kept == int((~np.isin(cloud["classification"], (7, 18))).sum())
 
 
+def test_square_extreme_matches_windowed_loop():
+    """SMRF's grey erosion/dilation equals the min/max over each cell's
+    radius-r square clipped to the array (a plain per-cell loop), NaN
+    propagating, including arrays narrower than the window."""
+    rs = np.random.RandomState(3)
+    for shape in [(7, 9), (1, 5), (12, 3)]:
+        a = rs.standard_normal(shape)
+        a[rs.rand(*shape) < 0.05] = np.nan
+        for r in range(1, 5):
+            for reduce, fill in ((np.min, np.inf), (np.max, -np.inf)):
+                want = np.array([[reduce(a[max(i - r, 0):i + r + 1,
+                                           max(j - r, 0):j + r + 1])
+                                  for j in range(shape[1])]
+                                 for i in range(shape[0])])
+                got = PC._square_extreme(a, r, reduce, fill)
+                np.testing.assert_array_equal(got, want)
+
+
 def test_smrf_ground_classification(spark):
     """SMRF-lite recovers ground labels on a synthetic scene: flat plane
     + scattered 'buildings' (elevated blocks) + canopy points."""

@@ -64,7 +64,8 @@ def test_difference_recovers_truth(sdfs, fx):
 
 def test_membership_matches_numpy_oracle(sdfs, fx):
     member = ZN.membership(
-        sdfs["ref"].select("row", "col", "x", "y", "value"), sdfs["zones"])
+        sdfs["ref"].select("row", "col", "x", "y", "value"), sdfs["zones"],
+        _grid(fx, "reference_dem"))
     got = member.select("row", "col", "zone_id").toPandas()
     oracle = fx.membership[["row", "col", "zone_id"]]
     got_set = set(map(tuple, got.to_numpy()))
@@ -79,7 +80,7 @@ def test_stable_bias_and_rms(sdfs, fx):
     t = fx.truth
     ga, gb = _grid(fx, "reference_dem"), _grid(fx, "compare_dem")
     dod = AL.difference(AL.align_pair(sdfs["ref"], sdfs["cmp"], ga, gb))
-    stable = ZN.derive_stable(dod, sdfs["zones"])
+    stable = ZN.derive_stable(dod, ZN.membership(dod, sdfs["zones"], ga))
     bias_df = ST.median_bias(stable, "dz")
     bias = bias_df.first()["bias"]
     # The correlated field (sd=0.2 m, range 60 m) leaves only ~10
@@ -101,7 +102,7 @@ def test_zonal_stats_feature_signal(sdfs, fx):
     ga, gb = _grid(fx, "reference_dem"), _grid(fx, "compare_dem")
     dod = AL.difference(AL.align_pair(sdfs["ref"], sdfs["cmp"], ga, gb))
     member = ZN.membership(dod.select("row", "col", "x", "y", "dz"),
-                           sdfs["zones"], kinds=["unstable"])
+                           sdfs["zones"], ga)
     zs = ST.zonal_stats(member, value="dz").toPandas().set_index("zone_id")
     for z in ("unstable1", "unstable2"):
         # zone-mean of the correlated field contributes ~N(0, ~0.1):
@@ -151,7 +152,8 @@ def test_variogram_recovers_model(spark, sdfs, fx):
     t = fx.truth
     ga, gb = _grid(fx, "reference_dem"), _grid(fx, "compare_dem")
     dod = AL.difference(AL.align_pair(sdfs["ref"], sdfs["cmp"], ga, gb))
-    stable = ZN.derive_stable(dod, sdfs["zones"]).select(
+    stable = ZN.derive_stable(
+        dod, ZN.membership(dod, sdfs["zones"], ga)).select(
         "row", "col", "x", "y", F.col("dz").alias("value"))
     params = VariogramParams(bin_width=10.0, max_lag_multiplier=0.5,
                              samples_per_area=3000.0, n_runs=3, seed=42)

@@ -1,6 +1,7 @@
 """R8 scanline rasterization parity: rasterize_membership must produce
-EXACTLY the cell set of the per-pixel PIP membership join (same even-odd
-half-open convention), including jagged polygons and holes."""
+EXACTLY the cell set that per-cell-centre ray casting
+(`geometry.pip_mask`, same even-odd half-open convention) selects,
+including jagged polygons and holes."""
 
 from __future__ import annotations
 
@@ -8,6 +9,7 @@ import numpy as np
 import pandas as pd
 
 from error_analysis_spark.fixtures import GridSpec
+from error_analysis_spark.functions.geometry import parse_wkt_polygon, pip_mask
 from error_analysis_spark.operators import zones as ZN
 
 
@@ -40,11 +42,21 @@ def test_scanline_matches_pip(spark):
          "(110 20, 130 20, 130 40, 110 40, 110 20))"),
     ], ["zone_id", "kind", "name", "wkt"])
 
-    pip = ZN.membership(px, zones).select("row", "col", "zone_id").toPandas()
-    burned = ZN.rasterize_membership(spark, zones, grid, tile=64)
-    scan = px.join(burned, ["row", "col"]) \
+    # reference: ray casting at every cell centre of the grid
+    rr, cc = np.mgrid[0:n, 0:n]
+    rr, cc = rr.ravel(), cc.ravel()
+    k_pip = set()
+    for z in zones.collect():
+        m = pip_mask(cc + 0.5, n - (rr + 0.5), parse_wkt_polygon(z["wkt"]))
+        k_pip |= {(int(r), int(c), z["zone_id"])
+                  for r, c in zip(rr[m], cc[m])}
+    burned = ZN.rasterize_membership(zones, grid, tile=64) \
         .select("row", "col", "zone_id").toPandas()
-    k_pip = set(map(tuple, pip.values.tolist()))
+    scan = ZN.membership(px, zones, grid) \
+        .select("row", "col", "zone_id").toPandas()
+    # every grid cell is a pixel, so the join keeps the burned set
+    assert set(map(tuple, burned.values.tolist())) == \
+        set(map(tuple, scan.values.tolist()))
     k_scan = set(map(tuple, scan.values.tolist()))
     assert k_pip == k_scan, (
         f"pip-only={list(k_pip - k_scan)[:5]} "

@@ -73,14 +73,14 @@ def test_fill_nodata_keeps_unreachable_cells(spark):
 
 
 def test_derive_join_no_phantom_rows(spark):
-    from error_analysis_spark.operators.focal import derive_join
+    from error_analysis_spark.operators.focal import derive_join_all
     n = 12
     rr, cc = np.mgrid[0:n, 0:n]
     pdf = pd.DataFrame({"row": rr.ravel().astype(np.int32),
                         "col": cc.ravel().astype(np.int32),
                         "value": np.ones(n * n)})
     px = spark.createDataFrame(pdf)
-    out = derive_join(px, 1.0, "roughness").toPandas()
+    out = derive_join_all(px, 1.0).toPandas()
     assert len(out) == n * n  # exactly the source key set, no (-1, *) rows
     assert out["row"].min() == 0 and out["col"].min() == 0
     assert out["row"].max() == n - 1
@@ -143,35 +143,18 @@ def test_w2_positional_pick_stays_jvm_only(spark):
 def test_registry_window_policy():
     """The driver oracle-checks only the FIRST 50 declared queries, so
     declaration order is a verification budget (COVERAGE.md). Pin the
-    policy: every _FRONT query (unverified-last-round + new/changed)
-    sits inside the window, only the documented _ROTATE_OUT tail sits
-    outside it, and nothing is dropped or duplicated."""
+    policy: the _CHANGED queries lead in their listed order, the rest
+    follow in registry order, and nothing is dropped or duplicated."""
     import __spark_entry__ as E
     names = list(E.queries())
-    assert len(names) == len(set(names))
-    window = set(names[:50])
-    for q in E._FRONT:
-        assert q in window, f"front-priority query {q} fell out of the window"
-    outside = set(names[50:])
-    planned = set(E._ROTATE_OUT) | set(E._POST_WINDOW_NEW)
-    assert outside <= planned, \
-        f"unplanned queries outside the window: {outside - planned}"
-    # every post-window declaration is new-this-round (not displacing a
-    # verified query) and carries a local oracle row via test_oracle
-    assert not (set(E._POST_WINDOW_NEW) & set(names[:50]))
-    oracles = E.oracle_sql()
-    # rows-only queries (no SQL-expressible oracle — e.g. KMeans-based
-    # sim_semantic_dedup) may enter the window only DELIBERATELY (named
-    # in _FRONT for their scheduled weak check, as COVERAGE.md's r03
-    # note planned for r04) and only while every query they displace to
-    # the tail carries a green row from the previous round — they never
-    # crowd out an unverified hash-checked query
-    rows_only = set(names) - set(oracles)
-    assert rows_only & window <= set(E._FRONT), \
-        f"undeclared rows-only queries in the window: " \
-        f"{(rows_only & window) - set(E._FRONT)}"
+    assert len(names) == len(set(names)) == len(E._MERGED)
+    k = len(E._CHANGED)
+    assert names[:k] == E._CHANGED
+    assert names[k:] == [n for n in E._MERGED if n not in E._CHANGED]
+    assert k <= 50
     # r05: sim_semantic_dedup gained a full oracle (seed cells +
     # recursive-CTE greedy) — the contract carries ZERO rows-only rows
+    rows_only = set(names) - set(E.oracle_sql())
     assert rows_only == set(), rows_only
     # consolidation invariant: every packed member is absent from the
     # declared registry but still owns its standalone function
@@ -221,40 +204,26 @@ def test_banded_signatures_match_long_form(spark):
     assert fast == slow
 
 
-def test_lang_scores_row_local_matches_join_form(spark):
-    """lang_scores (row-local array-filter over plan-time profiles) and
-    lang_scores_join (broadcast dictionary join) must score and predict
-    identically — the two are interchangeable by dictionary size."""
-    import pandas as pd
-
-    from error_analysis_spark.extensions import text as TX
-    df = spark.createDataFrame(pd.DataFrame({
-        "doc_id": [1, 2, 3, 4],
-        "text": ["the cat of the house", "le chat et la maison",
-                 "der hund und die katze", "no stop words here xyz"]}))
-    cols = ["doc_id", "pred_lang", "score_en", "score_fr", "score_de",
-            "score_es", "score_zh"]
-    a = (TX.lang_scores(df).select(*cols).toPandas()
-         .sort_values("doc_id").reset_index(drop=True))
-    b = (TX.lang_scores_join(df).select(*cols).toPandas()
-         .sort_values("doc_id").reset_index(drop=True))
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
-
-
 def test_membership_empty_zone_set(spark):
     """derive_stable on a zones table with NO unstable rows must return
     every valid pixel as stable (not crash on empty-schema inference)."""
     import pandas as pd
 
+    from error_analysis_spark.fixtures import GridSpec
     from error_analysis_spark.operators import zones as Z
     px = spark.createDataFrame(pd.DataFrame({
         "row": [0, 1], "col": [0, 1],
         "x": [0.5, 1.5], "y": [-0.5, -1.5]}))
+    g = GridSpec("g", width=2, height=2, x0=0.0, y0=0.0, res=1.0)
     zn = spark.createDataFrame(
         [("z1", "stable", "a", "POLYGON((0 0,2 0,2 -2,0 -2,0 0))")],
         "zone_id string, kind string, name string, wkt string")
-    out = Z.derive_stable(px, zn)
+    out = Z.derive_stable(px, Z.membership(px, zn, g))
     assert out.count() == 2  # nothing unstable -> everything stable
+    # and a zone table with no rows at all gives an empty membership
+    empty = zn.where("false")
+    assert Z.membership(px, empty, g).count() == 0
+    assert Z.derive_stable(px, Z.membership(px, empty, g)).count() == 2
 
 
 def test_align_treats_nan_as_nodata(spark):
@@ -284,9 +253,10 @@ def test_align_treats_nan_as_nodata(spark):
 
 
 def test_derive_join_matches_tiled_on_nodata_rows(spark):
-    """Both R2 strategies must emit identical row sets when the source
-    carries nodata-valued rows (NULL value) — the join path used to
-    silently drop them."""
+    """R2 must emit one row per source row when the source carries
+    nodata-valued rows (NULL value) — the join path used to silently
+    drop them — with NULL at the nodata centre and wherever the numpy
+    kernel's stencil is incomplete."""
     import numpy as np
     import pandas as pd
 
@@ -300,11 +270,15 @@ def test_derive_join_matches_tiled_on_nodata_rows(spark):
     pdf["value"] = pdf["value"].astype(object).where(pdf["value"].notna(),
                                                     None)
     px = spark.createDataFrame(pdf)
-    j = FO.derive_join(px, 1.0, "slope").toPandas() \
-        .sort_values(["row", "col"]).reset_index(drop=True)
-    t = FO.derive_tiled(px, 1.0, "slope", tile=4).toPandas() \
-        .sort_values(["row", "col"]).reset_index(drop=True)
-    assert len(j) == len(t) == n * n
-    jn, tn = j["value"].isna(), t["value"].isna()
-    assert (jn == tn).all()
-    np.testing.assert_allclose(j["value"][~jn], t["value"][~tn], rtol=1e-9)
+    j = FO.derive_join_all(px, 1.0).select("row", "col", "slope") \
+        .toPandas().sort_values(["row", "col"]).reset_index(drop=True)
+    assert len(j) == n * n
+    want = FO.derive_np(np.pad(vals, 1, constant_values=np.nan), 1.0,
+                        "slope")
+    # GDAL: a nodata centre is nodata out, though Horn slope skips it
+    want[3, 4] = np.nan
+    want = want.ravel()
+    jn = j["slope"].isna().to_numpy()
+    assert jn[3 * n + 4]
+    np.testing.assert_array_equal(jn, ~np.isfinite(want))
+    np.testing.assert_allclose(j["slope"][~jn], want[~jn], rtol=1e-9)

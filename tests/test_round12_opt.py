@@ -30,7 +30,7 @@ def test_funnel_stats_observation_parity(spark):
     s1 = docs.withColumn("quality", TX.quality_expr("text")) \
         .where(F.col("quality") >= cfg.min_quality)
     n1 = s1.count()
-    s2 = (TX.lang_scores(s1, "text", "doc_id")
+    s2 = (TX.lang_scores(s1, "text")
           .select(*s1.columns, "pred_lang")
           .where(F.col("pred_lang").isin(*cfg.keep_langs)))
     n2 = s2.count()

@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from error_analysis_spark.fixtures import make_dem_fixture
+from error_analysis_spark.fixtures import GridSpec, make_dem_fixture
 from error_analysis_spark.operators.zones import membership
 from error_analysis_spark.streaming import incremental as INC
 
@@ -15,6 +15,11 @@ from error_analysis_spark.streaming import incremental as INC
 @pytest.fixture(scope="module")
 def fx():
     return make_dem_fixture(n_rows=96, n_cols=96, seed=17)
+
+
+def _grid(fx) -> GridSpec:
+    t = fx.truth
+    return GridSpec("g", 96, 96, t["x0"], t["y0"], t["res"])
 
 
 def test_incremental_equals_batch(spark, fx, tmp_path_factory):
@@ -40,7 +45,8 @@ def test_incremental_equals_batch(spark, fx, tmp_path_factory):
 
     zones = spark.createDataFrame(fx.zones)
     member = membership(
-        px.select("row", "col", "x", "y").distinct(), zones).cache()
+        px.select("row", "col", "x", "y").distinct(), zones,
+        _grid(fx)).cache()
 
     stream = INC.stream_pixels(spark, str(stream_dir), max_files_per_trigger=1)
     dod = INC.incremental_dod(stream, ref)
@@ -90,7 +96,8 @@ def test_stateful_operator_matches_sql_path(spark, fx, tmp_path_factory):
 
     zones = spark.createDataFrame(fx.zones)
     member = membership(
-        px.select("row", "col", "x", "y").distinct(), zones).cache()
+        px.select("row", "col", "x", "y").distinct(), zones,
+        _grid(fx)).cache()
 
     stream = INC.stream_pixels(spark, str(stream_dir), max_files_per_trigger=1)
     dod = INC.incremental_dod(stream, ref)
