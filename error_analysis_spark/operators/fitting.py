@@ -6,19 +6,14 @@ Reference semantics: variography_uncertainty.py:731-890 (6 configs ×
 sigma ∈ {std, linear, exp, sqrt, sq}; loglik :668-677, init :557-567),
 609-666 (bootstrap synthetic variograms), 679-729 (k-fold CV).
 
-Spark-first design: the empirical variogram is tiny (≤ a few thousand
-bins), while the fit workload is a grid of independent optimizations —
-(config × init) for the search, (replicate) for the bootstrap, (fold)
-for CV. Each grid is a small DataFrame run through `applyInPandas`; the
-variogram rides along in the closure (driver-broadcast). The grid is
-tiny, so AQE coalesces its shuffle: the 30-row model-search grid runs
-as ONE task on the executor, the fits one after another — it is not a
-parallel search. It stays in a Python worker because the worker's
-single-threaded LM solve is bit-identical across core counts, which a
-driver-side fit on multi-threaded BLAS is not. The optimizer is a
-self-contained numpy Levenberg–Marquardt (no scipy dependency)
-with pinned perturbed inits, mirroring the reference's seeded
-`curve_fit` restarts.
+The empirical variogram is tiny (≤ a few thousand bins), so the U2
+search (30 `fit_single` calls) and the U3 replicates are plain numpy in
+the driver. The optimizer is a self-contained Levenberg–Marquardt (no
+scipy dependency) with pinned perturbed inits, mirroring the
+reference's seeded `curve_fit` restarts. It calls no BLAS, so a fit is
+bit-identical whatever the BLAS thread count. U4's folds run in one
+`applyInPandas` over `spark.range(k_folds)`: no shuffle, one task per
+range split.
 """
 
 from __future__ import annotations
@@ -29,7 +24,6 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 # --------------------------------------------------------------------------
 # Model: nested spherical + optional nugget (params = [C1..Cn, a1..an, (n0)])
@@ -39,12 +33,16 @@ from pyspark.sql import functions as F
 
 def spherical_gamma_np(h: np.ndarray, params: np.ndarray, n_comp: int,
                        nugget: bool) -> np.ndarray:
-    sills = params[:n_comp]
-    ranges = params[n_comp:2 * n_comp]
-    out = np.full_like(h, params[-1] if nugget else 0.0, dtype=np.float64)
-    for c, a in zip(sills, ranges):
-        u = np.minimum(h / max(a, 1e-12), 1.0)
-        out = out + c * (1.5 * u - 0.5 * u ** 3)
+    """γ(h) for one parameter vector (k,), shaped like `h`, or for a
+    block (m, k), shaped (m, *h.shape): row i equals the result for
+    params[i] bit for bit (same element-wise operations)."""
+    h = np.asarray(h, dtype=np.float64)
+    p = np.asarray(params, dtype=np.float64).T
+    p = p.reshape(p.shape + (1,) * h.ndim)  # p[i] broadcasts against h
+    u = np.minimum(h / np.maximum(p[n_comp:2 * n_comp], 1e-12), 1.0)
+    out = p[-1] if nugget else 0.0
+    for term in p[:n_comp] * (1.5 * u - 0.5 * u ** 3):  # not .sum(0): rounding
+        out = out + term
     return out
 
 
@@ -76,38 +74,74 @@ def _weights(sigma_type: str, lag: np.ndarray, gamma_std: np.ndarray) -> np.ndar
     raise ValueError(f"unknown sigma_type: {sigma_type}")
 
 
+def _cholesky_solve(a: list[list[float]], b: list[float]) -> np.ndarray | None:
+    """Solve a·x = b for symmetric positive-definite `a` (k ≤ 7) by a
+    Cholesky factorization in fixed loop order on Python floats: no
+    BLAS, so the result cannot depend on a thread count. Returns None
+    on a non-positive (or NaN) pivot."""
+    k = len(b)
+    low = [[0.0] * k for _ in range(k)]
+    for i in range(k):
+        li = low[i]
+        for j in range(i + 1):
+            lj = low[j]
+            s = a[i][j]
+            for m in range(j):
+                s -= li[m] * lj[m]
+            if j < i:
+                li[j] = s / lj[j]
+            elif not s > 0.0:
+                return None
+            else:
+                li[i] = math.sqrt(s)
+    x = list(b)
+    for i in range(k):  # forward: low·y = b
+        for m in range(i):
+            x[i] -= low[i][m] * x[m]
+        x[i] /= low[i][i]
+    for i in reversed(range(k)):  # backward: lowᵀ·x = y
+        for m in range(i + 1, k):
+            x[i] -= low[m][i] * x[m]
+        x[i] /= low[i][i]
+    return np.asarray(x)
+
+
 def levenberg_marquardt(residual_fn, p0: np.ndarray, bounds_lo: np.ndarray,
                         bounds_hi: np.ndarray, max_iter: int = 200,
                         tol: float = 1e-10) -> tuple[np.ndarray, float]:
-    """Compact numpy LM with box projection and numeric Jacobian."""
+    """Compact numpy LM with box projection and numeric Jacobian.
+
+    `residual_fn` maps a block of parameter vectors (m, k) to residual
+    rows (m, n), so the k Jacobian probes (forward difference, backward
+    at an upper bound) are one call. BLAS-free: sums are element-wise
+    and the damped normal equations go through `_cholesky_solve`."""
     p = np.clip(p0.astype(np.float64), bounds_lo, bounds_hi)
-    r = residual_fn(p)
-    cost = float(r @ r)
+    r = residual_fn(p[None, :])[0]
+    cost = float((r * r).sum())
     lam = 1e-3
     for _ in range(max_iter):
-        jac = np.empty((r.size, p.size))
-        for j in range(p.size):
-            step = max(1e-8, 1e-6 * abs(p[j]))
-            pj = p.copy()
-            pj[j] = min(p[j] + step, bounds_hi[j])
-            actual = pj[j] - p[j]
-            if actual == 0.0:
-                pj[j] = max(p[j] - step, bounds_lo[j])
-                actual = pj[j] - p[j]
-            jac[:, j] = (residual_fn(pj) - r) / actual if actual != 0 else 0.0
-        jtj = jac.T @ jac
-        jtr = jac.T @ r
+        step = np.maximum(1e-8, 1e-6 * np.abs(p))
+        fwd = np.minimum(p + step, bounds_hi)
+        probe = np.where(fwd - p != 0.0, fwd, np.maximum(p - step, bounds_lo))
+        actual = probe - p
+        moved = actual != 0.0
+        block = np.where(np.eye(p.size, dtype=bool), probe, p)
+        # row j of jt is ∂r/∂p_j; a parameter that cannot move gets 0
+        jt = (np.where(moved[:, None], residual_fn(block) - r, 0.0)
+              / np.where(moved, actual, 1.0)[:, None])
+        jtj = (jt[:, None, :] * jt[None, :, :]).sum(-1)
+        jtr = (jt * r).sum(-1)
+        damp = np.diag(np.diag(jtj) + 1e-12)
         improved = False
         for _try in range(12):
-            try:
-                delta = np.linalg.solve(jtj + lam * np.diag(np.diag(jtj) + 1e-12),
-                                        -jtr)
-            except np.linalg.LinAlgError:
+            delta = _cholesky_solve((jtj + lam * damp).tolist(),
+                                    (-jtr).tolist())
+            if delta is None:
                 lam *= 10
                 continue
             p_new = np.clip(p + delta, bounds_lo, bounds_hi)
-            r_new = residual_fn(p_new)
-            c_new = float(r_new @ r_new)
+            r_new = residual_fn(p_new[None, :])[0]
+            c_new = float((r_new * r_new).sum())
             if c_new < cost:
                 rel = (cost - c_new) / max(cost, 1e-300)
                 p, r, cost = p_new, r_new, c_new
@@ -191,17 +225,12 @@ def fit_single(lag: np.ndarray, gamma: np.ndarray, sigma: np.ndarray,
             "cost": float(cost)}
 
 
-_FIT_SCHEMA = ("config_id int, init_id int, n_comp int, nugget boolean, "
-               "aic double, cost double, params array<double>")
-
-
-def fit_best_spherical_model(spark: SparkSession, vario_pdf: pd.DataFrame,
+def fit_best_spherical_model(vario_pdf: pd.DataFrame,
                              sigma_type: str = "std", n_inits: int = 5,
                              seed: int = 42) -> tuple[pd.DataFrame, dict]:
-    """U2 — model search: 6 configs × n_inits optimizations via one
-    `applyInPandas` over a tiny task grid, which AQE coalesces into one
-    task (the fits run sequentially in one Python worker); min-AIC row
-    wins (ties to the simpler model via (aic, config_id) ordering).
+    """U2 — model search: 6 configs × n_inits `fit_single` optimizations
+    in the driver; min-AIC row wins (ties to the simpler model via
+    (aic, config_id, init_id) ordering).
 
     `vario_pdf`: columns lag, gamma_mean, gamma_std (A5 output collected —
     ≤ a few KB). Returns (all fit rows, best fit dict).
@@ -211,29 +240,15 @@ def fit_best_spherical_model(spark: SparkSession, vario_pdf: pd.DataFrame,
     gstd = (vario_pdf["gamma_std"].to_numpy(np.float64)
             if "gamma_std" in vario_pdf else np.full_like(lag, np.nan))
     sigma = _weights(sigma_type, lag, gstd)
-    configs = default_configs()
-    tasks = spark.createDataFrame(
-        [(c.config_id, c.n_comp, c.nugget, i)
-         for c in configs for i in range(n_inits)],
-        "config_id int, n_comp int, nugget boolean, init_id int")
-
-    def run_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for _, row in pdf.iterrows():
-            r = fit_single(lag, gamma, sigma, int(row.n_comp), bool(row.nugget),
-                           int(row.init_id), seed)
-            rows.append({
-                "config_id": int(row.config_id), "init_id": int(row.init_id),
-                "n_comp": int(row.n_comp), "nugget": bool(row.nugget),
-                "aic": r["aic"], "cost": r["cost"], "params": r["params"],
-            })
-        return pd.DataFrame(rows)
-
-    fits = (tasks
-            .groupBy("config_id", "init_id")
-            .applyInPandas(run_group, _FIT_SCHEMA)
-            .toPandas())
-    fits = fits.sort_values(["aic", "config_id", "init_id"]).reset_index(drop=True)
+    rows = []
+    for c in default_configs():
+        for i in range(n_inits):
+            r = fit_single(lag, gamma, sigma, c.n_comp, c.nugget, i, seed)
+            rows.append({"config_id": c.config_id, "init_id": i,
+                         "n_comp": c.n_comp, "nugget": c.nugget, **r})
+    fits = (pd.DataFrame(rows)
+            .sort_values(["aic", "config_id", "init_id"])
+            .reset_index(drop=True))
     best = fits.iloc[0].to_dict()
     if not np.isfinite(best["aic"]) or len(best["params"]) == 0:
         # every (config, init) failed — raise like the reference
@@ -250,7 +265,8 @@ def bootstrap_fit(spark: SparkSession, vario_pdf: pd.DataFrame, n_comp: int,
                   seed: int = 42) -> DataFrame:
     """U3 — parametric bootstrap: each replicate fits a synthetic variogram
     γ* ~ N(γ_mean, γ_std) (variography_uncertainty.py:609-666), seeded per
-    replicate. Output: one row per (rep, param index) — feed to
+    replicate. The replicates run in the driver; the result comes back
+    as a DataFrame with one row per (rep, param index) — feed to
     stats.param_percentiles for the 16/50/84 rollup (A15)."""
     lag = vario_pdf["lag"].to_numpy(np.float64)
     gamma = vario_pdf["gamma_mean"].to_numpy(np.float64)
@@ -260,22 +276,13 @@ def bootstrap_fit(spark: SparkSession, vario_pdf: pd.DataFrame, n_comp: int,
                     np.nanmedian(gstd_raw[gstd_raw > 0]) if
                     np.any(gstd_raw > 0) else 0.05 * np.nanmax(gamma))
     sigma = _weights(sigma_type, lag, gstd_raw)
-
-    def run_reps(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for rep in pdf["id"]:
-            rng = np.random.RandomState(seed + 100_000 + int(rep))
-            g_syn = gamma + rng.standard_normal(gamma.size) * gstd
-            r = fit_single(lag, g_syn, sigma, n_comp, nugget, 0, seed)
-            for j, v in enumerate(r["params"]):
-                rows.append({"rep": int(rep), "param_idx": j, "value": v})
-        # schema-correct empty frame when every replicate fit fails —
-        # a column-less DataFrame crashes the Arrow serializer
-        return pd.DataFrame(rows, columns=["rep", "param_idx", "value"])
-
-    reps = spark.range(n_boot)
-    return reps.groupBy((F.col("id") % 64).alias("g")).applyInPandas(
-        lambda pdf: run_reps(pdf), "rep int, param_idx int, value double")
+    rows = []
+    for rep in range(n_boot):
+        rng = np.random.RandomState(seed + 100_000 + rep)
+        g_syn = gamma + rng.standard_normal(gamma.size) * gstd
+        r = fit_single(lag, g_syn, sigma, n_comp, nugget, 0, seed)
+        rows += [(rep, j, v) for j, v in enumerate(r["params"])]
+    return spark.createDataFrame(rows, "rep int, param_idx int, value double")
 
 
 def cross_validate(spark: SparkSession, vario_pdf: pd.DataFrame, n_comp: int,

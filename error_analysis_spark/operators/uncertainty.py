@@ -14,10 +14,10 @@ correctness oracle (SURVEY §5.1). The ladder's per-zone dispatch is
 written once, in `sigma_a_by_zone`.
 
 Scale shapes: MC, FFT and analytical are bounded numpy kernels per
-polygon, run for a whole zone table by `sigma_a_by_zone`; Hugonnet
-broadcasts k centers against the pixel table (map-side cross join +
-two-level agg); brute force stays a bounded validation path
-(grid_points caps N).
+polygon, run in the driver over a collected zone table by
+`sigma_a_by_zone`; Hugonnet broadcasts k centers against the pixel
+table (map-side cross join + two-level agg); brute force stays a
+bounded validation path (grid_points caps N).
 """
 
 from __future__ import annotations
@@ -176,7 +176,7 @@ def estimate_monte_carlo(wkt: str, sills, ranges, nugget=0.0,
     numpy kernel. The two point sets are the streams
     `uniform_points_in_polygon` draws for `seed` and `seed + 1` (shared
     `_sample_part`), paired by index. Bounded per zone, so
-    `sigma_a_by_zone` runs it for every zone inside one Spark job."""
+    `sigma_a_by_zone` runs it for every zone of a zone table."""
     rings = parse_wkt_polygon(wkt)
     bounds = polygon_bounds(wkt)
     xa, ya, xb, yb = [], [], [], []
@@ -323,8 +323,8 @@ def estimate_fft(wkt: str, sills, ranges, nugget=0.0,
                  grid_points: int = 200) -> float:
     """A10 — autocorrelation of the polygon mask via rFFT × covariance map
     (variography_uncertainty.py:1276-1320). Grids are bounded
-    (grid_points default 200) so this is a per-zone numpy kernel — in
-    pipelines it runs inside applyInPandas per zone."""
+    (grid_points default 200) so this is a per-zone numpy kernel —
+    `sigma_a_by_zone` runs it for every zone of a zone table."""
     minx, miny, maxx, maxy = polygon_bounds(wkt)
     rings = parse_wkt_polygon(wkt)
     nx = ny = grid_points
@@ -355,45 +355,33 @@ def estimate_fft(wkt: str, sills, ranges, nugget=0.0,
 
 
 def sigma_a_by_zone(zones: DataFrame, sills, ranges, nugget=0.0,
-                    method: str = "fft", **kw) -> DataFrame:
-    """Per-zone σ_A for a zone table: one `applyInPandas` grouped by
-    zone_id runs the bounded numpy kernel (fft / analytical /
-    monte_carlo) for each zone — the reference's method ladder
-    (variography_uncertainty.py:989-1001) for the kernels whose cost is
-    bounded by grid_points² / num_steps / n_pairs. It is one Spark job
-    for all zones, not one job per zone. How many tasks share the zones
-    is AQE's choice: the zone table is tiny, so AQE coalesces the
-    shuffle to one partition, and on a `local[3]` session 60 zones ran
-    as ONE task, kernel after kernel.
+                    method: str = "fft", **kw) -> pd.DataFrame:
+    """Per-zone σ_A for a zone table: collects (zone_id, wkt) — one row
+    per zone, a few KB — and runs the bounded numpy kernel (fft /
+    analytical / monte_carlo) for each zone in the driver, the
+    reference's method ladder (variography_uncertainty.py:989-1001) for
+    the kernels whose cost is bounded by grid_points² / num_steps /
+    n_pairs. A zone table built from pandas is a LocalRelation, so the
+    collect runs no Spark job.
 
     Brute force takes a different input (one WKT, its own cross-join
     plan): call `estimate_brute_force` per zone, or
-    `brute_force_rect_by_zone` for rectangles. Output: zone_id, sigma_a.
+    `brute_force_rect_by_zone` for rectangles. Output: a pandas frame
+    (zone_id, sigma_a).
     """
-    import pandas as pd
-
-    if method not in ("fft", "analytical", "monte_carlo"):
+    s, r, n = list(sills), list(ranges), float(nugget)
+    kernel = {
+        "fft": lambda wkt: estimate_fft(wkt, s, r, n,
+                                        kw.get("grid_points", 200)),
+        "analytical": lambda wkt: estimate_analytical(
+            polygon_area(wkt), s, r, n, kw.get("num_steps", 1000)),
+        "monte_carlo": lambda wkt: estimate_monte_carlo(
+            wkt, s, r, n, kw.get("n_pairs", 100_000), kw.get("seed", 42)),
+    }.get(method)
+    if kernel is None:
         raise ValueError(
             f"sigma_a_by_zone runs bounded per-zone kernels only "
             f"(fft, analytical, monte_carlo), got: {method}")
-    s, r, n = list(sills), list(ranges), float(nugget)
-    gp = kw.get("grid_points", 200)
-    ns = kw.get("num_steps", 1000)
-    np_pairs = kw.get("n_pairs", 100_000)
-    seed = kw.get("seed", 42)
-
-    def one(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for row in pdf.itertuples(index=False):
-            if method == "fft":
-                v = estimate_fft(row.wkt, s, r, n, gp)
-            elif method == "monte_carlo":
-                v = estimate_monte_carlo(row.wkt, s, r, n, np_pairs, seed)
-            else:
-                v = estimate_analytical(polygon_area(row.wkt), s, r, n, ns)
-            out.append({"zone_id": row.zone_id, "sigma_a": v})
-        return pd.DataFrame(out)
-
-    return (zones.select("zone_id", "wkt")
-            .groupBy("zone_id")
-            .applyInPandas(one, "zone_id string, sigma_a double"))
+    return pd.DataFrame([(row.zone_id, kernel(row.wkt)) for row in
+                         zones.select("zone_id", "wkt").collect()],
+                        columns=["zone_id", "sigma_a"])

@@ -10,12 +10,13 @@ composable API. A reference user's workflow maps 1:1:
     stats_all / stats_each               →  step 4 (zonal_stats)
     median bias + bootstrap + subtract   →  step 5
     calculate_mean_variogram_numba       →  step 6 (empirical_variogram)
-    fit_best_spherical_model             →  step 7
+    fit_best_spherical_model             →  step 7 (driver numpy LM)
     RegionalUncertaintyEstimator         →  step 8 (sigma_a_by_zone, MC)
 
 Everything before `.collect()` stays one lazy DataFrame DAG; the only
-materializations are the tiny model-facing tables (variogram bins, fit
-params), exactly where the reference materializes whole GeoTIFFs.
+materializations are the tiny model-facing tables (variogram bins, zone
+list) that steps 7-8 consume in driver numpy, exactly where the
+reference materializes whole GeoTIFFs.
 """
 
 from __future__ import annotations
@@ -108,11 +109,10 @@ def analyze_pair(reference: DataFrame, compare: DataFrame,
     member.unpersist()
     stable.unpersist()
     _fits, best = fit_best_spherical_model(
-        reference.sparkSession, vg_pdf.dropna(subset=["gamma_mean"]),
-        seed=seed)
+        vg_pdf.dropna(subset=["gamma_mean"]), seed=seed)
 
-    # 8: σ_A per unstable zone (J5/A9 Monte Carlo, one applyInPandas
-    # job over all zones)
+    # 8: σ_A per unstable zone (J5/A9 Monte Carlo kernel per zone, in
+    # the driver over the collected zone table)
     import numpy as np
     # params layout: [C1..Cn, a1..an, nugget?] (fitting._initial_params)
     params = np.asarray(best["params"], dtype=float)
@@ -123,7 +123,7 @@ def analyze_pair(reference: DataFrame, compare: DataFrame,
     out = UN.sigma_a_by_zone(zones.where(F.col("kind") == "unstable"),
                              sills, ranges, nugget, method="monte_carlo",
                              seed=seed)
-    sigma_a = {r["zone_id"]: r["sigma_a"] for r in out.collect()}
+    sigma_a = dict(zip(out["zone_id"], out["sigma_a"]))
 
     return PairAnalysis(dod=corrected, bias=float(bias),
                         bias_std=float(bias_std), rms=float(rms),

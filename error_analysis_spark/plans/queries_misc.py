@@ -209,18 +209,18 @@ FROM boot GROUP BY param
 
 
 # --------------------------------------------------------------------------
-# Per-zone sigma_A — the distributed applyInPandas kernel, oracle-gated:
-# the analytical method (SC15) is a deterministic 1000-step midpoint
-# integral DuckDB restates with generate_series. The FFT method shares
-# the same per-zone plumbing and is pinned by cross-method agreement
-# tests (tests/test_fitting_uncertainty.py), the reference's own oracle
-# (variography_uncertainty.py:995).
+# Per-zone sigma_A — the per-zone kernel ladder over a collected zone
+# table, oracle-gated: the analytical method (SC15) is a deterministic
+# 1000-step midpoint integral DuckDB restates with generate_series. The
+# FFT method shares the same per-zone plumbing and is pinned by
+# cross-method agreement tests (tests/test_fitting_uncertainty.py), the
+# reference's own oracle (variography_uncertainty.py:995).
 # --------------------------------------------------------------------------
 
 def sigma_a_zones(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed per-zone uncertainty: one applyInPandas task per zone
-    runs the SC15 equivalent-disk integral over nation-derived rectangle
-    zones with a fixed fitted model (sill 0.04, range 25, nugget 0.002)."""
+    """Per-zone uncertainty: the SC15 equivalent-disk integral per
+    nation-derived rectangle zone, run in the driver by `sigma_a_by_zone`
+    with a fixed fitted model (sill 0.04, range 25, nugget 0.002)."""
     from pyspark.sql import functions as _F
 
     from error_analysis_spark.operators.uncertainty import sigma_a_by_zone
@@ -238,8 +238,10 @@ def sigma_a_zones(spark: SparkSession, sf_dir: str) -> DataFrame:
             _F.col("n_nationkey") * 100,
         ).alias("wkt"),
     )
-    out = sigma_a_by_zone(zones, [0.04], [25.0], 0.002, method="analytical",
-                          num_steps=1000)
+    out = spark.createDataFrame(
+        sigma_a_by_zone(zones, [0.04], [25.0], 0.002, method="analytical",
+                        num_steps=1000),
+        "zone_id string, sigma_a double")
     return out.select("zone_id", _F.round("sigma_a", 6).alias("sigma_a"))
 
 

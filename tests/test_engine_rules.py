@@ -51,3 +51,33 @@ def test_engine_sets_no_session_config_and_no_hidden_attributes():
     assert not found, ("engine code must pass contracts as arguments, "
                        "not session conf or hidden attributes:\n"
                        + "\n".join(found))
+
+
+def _blas_calls(tree: ast.AST) -> list[tuple[int, str]]:
+    out = []
+    for node in ast.walk(tree):
+        if (isinstance(node, (ast.BinOp, ast.AugAssign))
+                and isinstance(node.op, ast.MatMult)):
+            out.append((node.lineno, "@"))
+        if isinstance(node, ast.Attribute) and node.attr in ("linalg", "dot"):
+            out.append((node.lineno, f".{node.attr}"))
+        if isinstance(node, ast.ImportFrom) and (
+                (node.module or "").startswith("numpy.linalg")
+                or any(a.name in ("linalg", "dot") for a in node.names)):
+            out.append((node.lineno, f"from {node.module} import"))
+        if isinstance(node, ast.Import) and any(
+                a.name.startswith("numpy.linalg") for a in node.names):
+            out.append((node.lineno, "import numpy.linalg"))
+    return out
+
+
+def test_fitting_calls_no_blas():
+    """The variogram model search runs in the driver, whose BLAS is
+    multi-threaded; its fits are bit-identical across thread counts only
+    because `operators/fitting.py` never reaches BLAS. No `@`, no
+    `np.linalg.*`, no `np.dot` / `.dot(` there."""
+    path = ENGINE / "operators" / "fitting.py"
+    found = _blas_calls(ast.parse(path.read_text(), filename=str(path)))
+    assert not found, ("operators/fitting.py must stay BLAS-free:\n"
+                       + "\n".join(f"{path.name}:{line}: {what}"
+                                   for line, what in found))

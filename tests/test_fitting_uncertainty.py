@@ -34,8 +34,8 @@ def _clean_variogram(n_bins=60, bin_width=10.0):
     })
 
 
-def test_fit_recovers_known_params(spark):
-    fits, best = FT.fit_best_spherical_model(spark, _clean_variogram(),
+def test_fit_recovers_known_params():
+    fits, best = FT.fit_best_spherical_model(_clean_variogram(),
                                              sigma_type="std", n_inits=3)
     assert best["aic"] < np.inf
     n_comp, nugget = int(best["n_comp"]), bool(best["nugget"])
@@ -47,7 +47,7 @@ def test_fit_recovers_known_params(spark):
     assert abs(rng_fit - RANGES[0]) / RANGES[0] < 0.15
 
 
-def test_white_noise_prefers_flat_model(spark):
+def test_white_noise_prefers_flat_model():
     """White noise ⇒ flat variogram at σ²; the winning model must predict
     an essentially flat curve (SURVEY §5.2-3a)."""
     rng = np.random.RandomState(0)
@@ -56,7 +56,7 @@ def test_white_noise_prefers_flat_model(spark):
     gamma = 0.01 + rng.standard_normal(n) * 1e-4
     pdf = pd.DataFrame({"lag": lag, "gamma_mean": gamma,
                         "gamma_std": np.full(n, 1e-4)})
-    fits, best = FT.fit_best_spherical_model(spark, pdf, n_inits=3)
+    fits, best = FT.fit_best_spherical_model(pdf, n_inits=3)
     params = np.asarray(best["params"])
     n_comp, nugget = int(best["n_comp"]), bool(best["nugget"])
     pred = FT.spherical_gamma_np(lag, params, n_comp, nugget)
@@ -178,7 +178,7 @@ def _vario_from(sills, ranges, nugget, noise=0.0, n_bins=40, bw=5.0, seed=3):
                          "gamma_std": np.full(n_bins, 0.002)})
 
 
-def test_aic_ranking_fixture(spark):
+def test_aic_ranking_fixture():
     """Pins the U2 model-search AIC semantics the reference gets from
     scipy curve_fit (variography_uncertainty.py:784-844): the RANKING,
     not raw params.
@@ -192,8 +192,7 @@ def test_aic_ranking_fixture(spark):
     beat every 1-comp config."""
     # (a) parsimony under nesting
     v1 = _vario_from([0.05], [60.0], 0.0)
-    fits, best = FT.fit_best_spherical_model(spark, v1, sigma_type="std",
-                                             seed=42)
+    fits, best = FT.fit_best_spherical_model(v1, sigma_type="std", seed=42)
     assert best["config_id"] == 0 and best["n_comp"] == 1 \
         and not best["nugget"]
     sigma = np.full(len(v1), 0.002)
@@ -204,21 +203,63 @@ def test_aic_ranking_fixture(spark):
 
     # (b) real nugget demands the nugget term
     v2 = _vario_from([0.04], [50.0], 0.02)
-    fits2, best2 = FT.fit_best_spherical_model(spark, v2,
-                                               sigma_type="std", seed=42)
+    fits2, best2 = FT.fit_best_spherical_model(v2, sigma_type="std",
+                                               seed=42)
     per2 = fits2.groupby("config_id")["aic"].min()
     assert per2[1] < per2[0]  # (1comp, nugget) beats (1comp, none)
     assert bool(best2["nugget"])
 
     # (c) two separated structures demand two components
     v3 = _vario_from([0.03, 0.05], [20.0, 160.0], 0.0, noise=1e-4)
-    fits3, best3 = FT.fit_best_spherical_model(spark, v3,
-                                               sigma_type="std", seed=42)
+    fits3, best3 = FT.fit_best_spherical_model(v3, sigma_type="std",
+                                               seed=42)
     per3 = fits3.groupby("config_id")["aic"].min()
     best_2comp = min(per3[2], per3[3])
     best_1comp = min(per3[0], per3[1])
     assert best_2comp < best_1comp
     assert int(best3["n_comp"]) >= 2
+
+
+_FIT_CHILD = """
+import json, sys
+import pandas as pd
+from error_analysis_spark.operators.fitting import fit_best_spherical_model
+out = []
+for cols in json.load(sys.stdin):
+    fits, _ = fit_best_spherical_model(pd.DataFrame(cols), seed=42)
+    out.append([[int(r.config_id), int(r.init_id), r.aic.hex(),
+                 [float(v).hex() for v in r.params]]
+                for r in fits.itertuples()])
+json.dump(out, sys.stdout)
+"""
+
+
+def test_fit_bit_identical_across_blas_threads():
+    """The model search calls no BLAS, so its AIC and params cannot
+    depend on the BLAS thread count: the same fixtures fitted in three
+    processes with OPENBLAS_NUM_THREADS = 1, 2, 4 agree bit for bit
+    (floats compared as hex)."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    fixtures = [_clean_variogram(), _vario_from([0.05], [60.0], 0.0),
+                _vario_from([0.04], [50.0], 0.02),
+                _vario_from([0.03, 0.05], [20.0, 160.0], 0.0, noise=1e-4)]
+    payload = json.dumps([{c: f[c].tolist() for c in f} for f in fixtures])
+    runs = []
+    for threads in ("1", "2", "4"):
+        env = dict(os.environ, OPENBLAS_NUM_THREADS=threads,
+                   PYTHONPATH=root)
+        done = subprocess.run([sys.executable, "-c", _FIT_CHILD],
+                              input=payload, capture_output=True, text=True,
+                              env=env, cwd=root, timeout=300, check=True)
+        runs.append(json.loads(done.stdout))
+    assert len(runs[0]) == len(fixtures)
+    assert all(len(rows) == 30 for rows in runs[0])
+    assert runs[0] == runs[1] == runs[2]
 
 
 def test_uniform_points_deterministic(spark):

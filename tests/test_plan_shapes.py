@@ -523,8 +523,9 @@ def test_registry_wide_plan_invariants(spark):
     3. Arrow-batched Python (ArrowEvalPython / FlatMapGroupsInPandas /
        MapInPandas) appears ONLY in the documented kernels: pandas
        UDFs for CRS (SURVEY §7 design), applyInPandas for the zone
-       scanline rasterizer and the σ_A / blocked-GEMM / k-means numpy
-       kernels, mapInPandas for multimodal decode.
+       scanline rasterizer and the blocked-GEMM / k-means numpy
+       kernels, mapInPandas for multimodal decode. (Per-zone σ_A runs
+       in the driver, so no σ_A query plans a Python stage.)
 
     Swept at the sf0.001 sibling of SF_DIR so eager sub-steps
     (localCheckpoint count tables, driver-side zone lists) stay
@@ -535,7 +536,7 @@ def test_registry_wide_plan_invariants(spark):
     from error_analysis_spark import cachereg
 
     sf_dir = os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.001")
-    allowed_python = {"sigma_a_pack", "sim_pair_pack",
+    allowed_python = {"sim_pair_pack",
                       "sim_semantic_dedup", "a13_zone_pixel_counts",
                       "sc16_utm_roundtrip", "mm_pack",
                       # round 8: the PQ encode/ADC scan is a documented

@@ -103,7 +103,8 @@ def test_block_topk_equals_pairwise(vectors):
 
 def test_sigma_a_by_zone_matches_driver(spark):
     from error_analysis_spark.operators.uncertainty import (
-        estimate_fft, sigma_a_by_zone,
+        estimate_analytical, estimate_fft, estimate_monte_carlo,
+        polygon_area, sigma_a_by_zone,
     )
     import pandas as pd
     zones = []
@@ -116,12 +117,24 @@ def test_sigma_a_by_zone_matches_driver(spark):
                     f"{x0} {y0+h}, {x0} {y0}))"),
         })
     zdf = spark.createDataFrame(pd.DataFrame(zones))
-    got = sigma_a_by_zone(zdf, [0.04], [25.0], 0.002, method="fft",
-                          grid_points=80).toPandas() \
-        .set_index("zone_id")["sigma_a"]
-    for z in zones:
-        want = estimate_fft(z["wkt"], [0.04], [25.0], 0.002, grid_points=80)
-        np.testing.assert_allclose(got[z["zone_id"]], want, rtol=1e-12)
+    model = ([0.04], [25.0], 0.002)
+    kernels = {
+        "fft": (dict(grid_points=80),
+                lambda wkt: estimate_fft(wkt, *model, grid_points=80)),
+        "analytical": (dict(num_steps=500),
+                       lambda wkt: estimate_analytical(
+                           polygon_area(wkt), *model, num_steps=500)),
+        "monte_carlo": (dict(n_pairs=5_000, seed=7),
+                        lambda wkt: estimate_monte_carlo(
+                            wkt, *model, n_pairs=5_000, seed=7)),
+    }
+    for method, (kw, kernel) in kernels.items():
+        got = sigma_a_by_zone(zdf, *model, method=method, **kw) \
+            .set_index("zone_id")["sigma_a"]
+        assert sorted(got.index) == [z["zone_id"] for z in zones]
+        for z in zones:
+            np.testing.assert_allclose(got[z["zone_id"]], kernel(z["wkt"]),
+                                       rtol=1e-12, err_msg=method)
 
 
 def test_jaccard_max_df_pruning(spark):
